@@ -23,9 +23,8 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     from pyspark.sql import functions as F
 
-    from flink_job_spark.functions.hashing import row_hash_sql_expr
     from flink_job_spark.operators.audit import hash_mismatch_flag
-    from flink_job_spark.operators.envelope import with_envelope
+    from flink_job_spark.operators.envelope import DEFAULT_SRC_SYSTEM, stamp
     from flink_job_spark.operators.snapshot import freeze_cutoff, snapshot_scan
     from flink_job_spark.session import ensure_session_confs
     from flink_job_spark.sources.tables import load_table
@@ -34,14 +33,11 @@ def entry(spark: SparkSession) -> DataFrame:
     li = load_table(spark, "/root/testdata/sf0.001", "lineitem")
     cutoff = freeze_cutoff(li, "l_orderkey")
     scan = snapshot_scan(li, list(li.columns), "l_orderkey", cutoff, ordered=False)
-    enveloped = with_envelope(scan)
-    audited = enveloped.withColumn(
-        "row_hash_iceberg",
-        F.expr(row_hash_sql_expr(scan.schema, list(scan.columns))),
-    )
-    return audited.agg(
+    stamped, names = stamp(scan, DEFAULT_SRC_SYSTEM, None, None)
+    mismatch = hash_mismatch_flag(names["row_hash"], names["row_hash_iceberg"])
+    return stamped.agg(
         F.count(F.lit(1)).alias("target_count"),
-        F.coalesce(F.sum(hash_mismatch_flag()), F.lit(0)).alias("hash_mismatches"),
+        F.coalesce(F.sum(mismatch), F.lit(0)).alias("hash_mismatches"),
         F.lit(str(cutoff)).alias("cutoff"),
     )
 

@@ -14,7 +14,7 @@ import datetime as dt
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from flink_job_spark.functions.hashing import row_hash_column
+from flink_job_spark.functions.hashing import row_hash_column, row_hash_sql_expr
 from flink_job_spark.types import ColumnInfo
 
 OP_INITIAL = "INITIAL"          # mis:1112
@@ -88,3 +88,29 @@ def with_envelope(
     projection = [F.col(c) for c in src_cols]
     projection += [values[slot].alias(names[slot]) for slot, _ in TECH_COLUMNS]
     return df.select(*projection)
+
+
+def stamp(
+    df: DataFrame,
+    src_system_code: str,
+    load_dttm: dt.datetime | None,
+    infos: dict[str, ColumnInfo] | None,
+    row_hash: Column | None = None,
+) -> tuple[DataFrame, dict[str, str]]:
+    """The full stamp every ingest path writes: the envelope with
+    ``row_hash_iceberg`` filled by the independent SQL-string hash, evaluated
+    during the write — same engine, independent implementation
+    (mis:918-939). Returns the stamped frame and the collision-resolved
+    envelope names the audit must compare."""
+    src_cols = list(df.columns)
+    names = tech_column_names(src_cols)
+    sink_hash = row_hash_sql_expr(df.schema, src_cols, infos)
+    enveloped = with_envelope(df, src_system_code, load_dttm, infos, row_hash)
+    return enveloped.withColumn(names["row_hash_iceberg"], F.expr(sink_hash)), names
+
+
+def with_load_month(df: DataFrame, names: dict[str, str]) -> DataFrame:
+    """Explicit ``load_month`` partition column: the parquet stand-in for the
+    hidden month(load_dttm) transform (mis:905)."""
+    return df.withColumn("load_month",
+                         F.date_format(F.col(names["load_dttm"]), "yyyy-MM"))

@@ -57,12 +57,3 @@ def snapshot_scan(df: DataFrame, columns: list[str], order_col: str,
     out = df.select(*columns).filter(resume_predicate(order_col, cutoff, floor))
     return out.orderBy(order_col) if ordered else out
 
-
-def probe_access(df_loader, table: str) -> bool:
-    """Access probe: 'SELECT FIRST 1 1' equivalent; failures mean skip-table
-    (mis:494-525)."""
-    try:
-        df_loader(table).limit(1).count()
-        return True
-    except Exception:
-        return False

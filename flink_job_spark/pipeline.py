@@ -27,13 +27,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_job_spark.functions.hashing import row_hash_sql_expr
 from flink_job_spark.operators.audit import AuditReport, run_consistency_check
-from flink_job_spark.operators.envelope import (
-    DEFAULT_SRC_SYSTEM,
-    tech_column_names,
-    with_envelope,
-)
+from flink_job_spark.operators.envelope import DEFAULT_SRC_SYSTEM, stamp, with_load_month
 from flink_job_spark.operators.snapshot import cutoff_predicate, freeze_cutoff, snapshot_scan
 from flink_job_spark.types import ColumnInfo, infos_from_schema, quote_identifier
 
@@ -143,15 +138,7 @@ def snapshot_ingest(
 
         scan = snapshot_scan(source, list(source.columns), order_col, cutoff,
                              floor=floor, ordered=False)
-        enveloped = with_envelope(scan, cfg.src_system_code,
-                                  load_dttm=cfg.load_dttm or dt.datetime.now(),
-                                  infos=cfg.infos)
-
-        # sink-side hash: the independently generated SQL expression, evaluated
-        # during the write — same engine, independent implementation (mis:918-939)
-        names = tech_column_names(list(scan.columns))
-        sink_hash = row_hash_sql_expr(scan.schema, list(scan.columns), cfg.infos)
-        hashed = enveloped.withColumn(names["row_hash_iceberg"], F.expr(sink_hash))
+        hashed, names = stamp(scan, cfg.src_system_code, cfg.load_dttm, cfg.infos)
 
         obs = None
         if cfg.progress:
@@ -179,10 +166,7 @@ def snapshot_ingest(
                     f"{quote_identifier(cfg.catalog)}."
                     f"{quote_identifier(cfg.database)}.{quote_identifier(table)}")
             else:
-                # parquet stand-in: explicit load_month partition column emulates
-                # the hidden month(load_dttm) transform (mis:905)
-                to_write = hashed.withColumn(
-                    "load_month", F.date_format(F.col(names["load_dttm"]), "yyyy-MM"))
+                to_write = with_load_month(hashed, names)
                 if cfg.cluster_by_key:
                     to_write = to_write.sortWithinPartitions(order_col)
                 drift = _detect_schema_drift(spark, target_path, to_write.schema) \

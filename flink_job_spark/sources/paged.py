@@ -83,14 +83,11 @@ class PagedCursorStreamReader(DataSourceStreamReader):
     def __init__(self, options):
         self.cutoff = int(options.get("cutoff", 0))
         self.fetch_size = int(options.get("fetch_size", DEFAULT_FETCH_SIZE))
-        self.pages_per_batch = int(options.get("pages_per_batch", 1))
 
     def initialOffset(self) -> dict:
         return {"last_key": -1}
 
     def latestOffset(self) -> dict:
-        # admit up to pages_per_batch new pages per micro-batch (the
-        # maxFilesPerTrigger-style backpressure bound)
         # NOTE: called once per micro-batch; state lives in the offset log,
         # not in this object.
         return {"last_key": self.cutoff}

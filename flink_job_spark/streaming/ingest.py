@@ -4,98 +4,48 @@ reference's exactly-once resumable source (SURVEY §2.7, milestone 3).
 The reference implements exactly-once with a checkpointed row-offset
 (`ListState<Long>` snapshot/restore, mis:1019-1059) and 60s EXACTLY_ONCE
 checkpoints (mis:151-160). In Spark the whole mechanism IS the Structured
-Streaming checkpoint: the file-source offset log records which input files are
-committed; `Trigger.AvailableNow` drains all available input then stops —
-a restartable, exactly-once bounded snapshot, strictly stronger than SKIP-n
+Streaming checkpoint: the source's offset log records what is committed;
+`Trigger.AvailableNow` drains all available input then stops — a
+restartable, exactly-once bounded snapshot, strictly stronger than SKIP-n
 resume (offsets commit atomically with the sink epoch).
 
-The transformation chain reuses the exact batch builders (envelope + dual
-hash) — one definition, two execution modes.
+One core, :func:`stream_ingest`, takes any streaming DataFrame (a file
+stream, the paged cursor), stamps it with the batch pipeline's own builder
+(:func:`~flink_job_spark.operators.envelope.stamp`) and writes and audits
+every epoch before its offsets commit. :func:`stream_paged_ingest_audited`
+is a thin wrapper that builds the paged-cursor source and calls it.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from flink_job_spark.functions.hashing import row_hash_sql_expr
-from flink_job_spark.operators.envelope import tech_column_names, with_envelope
-
-
-def stream_snapshot_source(spark: SparkSession, src_dir: str,
-                           schema: T.StructType,
-                           max_files_per_trigger: int | None = None) -> DataFrame:
-    """File-stream source over a parquet directory (schema required for
-    streaming reads). `max_files_per_trigger` bounds each micro-batch — the
-    ingestion-rate control that plays the role of the reference's
-    backpressure (Flink's network backpressure has no batch analog; bounding
-    the per-epoch input is how Structured Streaming keeps sink pressure and
-    state growth flat). At scale this maps to any streaming source (Kafka
-    `maxOffsetsPerTrigger`, Kinesis) unchanged."""
-    r = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-    return r.parquet(src_dir)
+from flink_job_spark.operators.audit import AuditReport, run_consistency_check
+from flink_job_spark.operators.envelope import DEFAULT_SRC_SYSTEM, stamp, with_load_month
+from flink_job_spark.pipeline import ConsistencyError
 
 
-def stream_snapshot_ingest(
-    spark: SparkSession,
-    src_dir: str,
-    schema: T.StructType,
+def stream_ingest(
+    stream_df: DataFrame,
     target_dir: str,
     checkpoint_dir: str,
-    src_system_code: str = "mis",
-    load_dttm: dt.datetime | None = None,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """availableNow snapshot: drain current input, envelope + dual-hash it,
-    append to the parquet sink, commit offsets — then stop. Re-running after
-    new files arrive processes ONLY the new files (the resume semantics the
-    reference builds by hand with SKIP-n). With `max_files_per_trigger`,
-    availableNow drains in bounded micro-batches (each committing its own
-    epoch) instead of one giant batch."""
-    src = stream_snapshot_source(spark, src_dir, schema, max_files_per_trigger)
-    src_cols = list(src.columns)
-    enveloped = with_envelope(src, src_system_code,
-                              load_dttm=load_dttm or dt.datetime.now())
-    names = tech_column_names(src_cols)
-    out = (
-        enveloped
-        .withColumn(names["row_hash_iceberg"],
-                    F.expr(row_hash_sql_expr(src.schema, src_cols)))
-        .withColumn("load_month", F.date_format(F.col(names["load_dttm"]), "yyyy-MM"))
-    )
-    q = (
-        out.writeStream
-        .format("parquet")
-        .option("path", target_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("load_month")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def stream_snapshot_ingest_audited(
-    spark: SparkSession,
-    src_dir: str,
-    schema: T.StructType,
-    target_dir: str,
-    checkpoint_dir: str,
-    src_system_code: str = "mis",
+    *,
+    src_system_code: str = DEFAULT_SRC_SYSTEM,
     load_dttm: dt.datetime | None = None,
     fail_on_consistency_error: bool = True,
-    row_hash=None,
-):
-    """Streaming ingest with the batch pipeline's COUNT+mismatch gate wired
-    into a ``foreachBatch`` sink: every micro-batch is written AND audited
-    (dual-hash mismatch count, exact per-batch row count) before its offsets
-    commit — the streaming twin of the post-load audit (mis:1264-1331).
+    row_hash: Column | None = None,
+) -> list[AuditReport]:
+    """availableNow ingest of ``stream_df`` with the batch pipeline's
+    COUNT+mismatch gate wired into a ``foreachBatch`` sink: every micro-batch
+    is stamped, written AND audited (dual-hash mismatch count, exact
+    per-batch row count) before its offsets commit — the streaming twin of
+    the post-load audit (mis:1264-1331). Re-running on the same checkpoint
+    after new input arrives processes ONLY the new input (the resume
+    semantics the reference builds by hand with SKIP-n); a rate-capped source
+    drains in bounded epochs, each committing its own offsets.
 
     With ``fail_on_consistency_error`` a mismatching batch raises
     :class:`~flink_job_spark.pipeline.ConsistencyError` inside foreachBatch,
@@ -107,27 +57,12 @@ def stream_snapshot_ingest_audited(
     ``row_hash`` overrides the source-side hash column (the audit exists
     precisely because the two hash implementations are independent inputs).
     Returns the per-batch :class:`AuditReport` ledger."""
-    from flink_job_spark.operators.audit import AuditReport, hash_mismatch_flag
-    from flink_job_spark.pipeline import ConsistencyError
-
-    src = stream_snapshot_source(spark, src_dir, schema)
-    src_cols = list(src.columns)
-    enveloped = with_envelope(src, src_system_code,
-                              load_dttm=load_dttm or dt.datetime.now(),
-                              row_hash=row_hash)
-    names = tech_column_names(src_cols)
-    out = (
-        enveloped
-        .withColumn(names["row_hash_iceberg"],
-                    F.expr(row_hash_sql_expr(src.schema, src_cols)))
-        .withColumn("load_month", F.date_format(F.col(names["load_dttm"]), "yyyy-MM"))
-    )
-
+    stamped, names = stamp(stream_df, src_system_code, load_dttm, None, row_hash)
     reports: list[AuditReport] = []
     q = (
-        out.writeStream
-        .foreachBatch(_audited_batch_sink(spark, target_dir, names, reports,
-                                          fail_on_consistency_error))
+        with_load_month(stamped, names).writeStream
+        .foreachBatch(_audited_batch_sink(stream_df.sparkSession, target_dir, names,
+                                          reports, fail_on_consistency_error))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
@@ -138,11 +73,9 @@ def stream_snapshot_ingest_audited(
 
 def _audited_batch_sink(spark: SparkSession, target_dir: str, names: dict,
                         reports: list, fail_on_consistency_error: bool):
-    """The shared write-and-audit ``foreachBatch`` body: idempotent
+    """The write-and-audit ``foreachBatch`` body: idempotent
     batch_id-partitioned dynamic overwrite, then audit what actually LANDED
     (re-read from the sink) before the epoch's offsets may commit."""
-    from flink_job_spark.operators.audit import AuditReport, hash_mismatch_flag
-    from flink_job_spark.pipeline import ConsistencyError
 
     def write_and_audit(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
@@ -163,12 +96,9 @@ def _audited_batch_sink(spark: SparkSession, target_dir: str, names: dict,
             # twice made delta == 0 by construction)
             tgt = spark.read.parquet(target_dir).filter(
                 F.col("batch_id") == batch_id)
-            tn, mm = tgt.agg(
-                F.count(F.lit(1)),
-                F.coalesce(F.sum(hash_mismatch_flag(
-                    names["row_hash"], names["row_hash_iceberg"])), F.lit(0)),
-            ).first()
-            report = AuditReport(f"batch:{batch_id}", int(n), int(tn), int(mm))
+            report = run_consistency_check(
+                f"batch:{batch_id}", n, tgt, None,
+                h1=names["row_hash"], h2=names["row_hash_iceberg"])
             reports.append(report)
             if not report.ok and fail_on_consistency_error:
                 raise ConsistencyError(f"batch:{batch_id}", report)
@@ -192,8 +122,8 @@ def stream_paged_ingest_audited(
     """The FULL reference-pipeline streaming twin, end to end: the paged
     keyed-cursor SOURCE (sources/paged.py — the reference's fetch-size-paged
     JDBC read whose streaming offset log carries the last committed key)
-    composed with the audited exactly-once SINK (`_audited_batch_sink` —
-    per-epoch COUNT + dual-hash mismatch gate before offsets commit).
+    fed to :func:`stream_ingest` (per-epoch COUNT + dual-hash mismatch gate
+    before offsets commit).
 
     Semantics under failure, proven in tests/test_streaming.py:
     - a restart with a HIGHER cutoff and the same checkpoint reads only
@@ -212,26 +142,7 @@ def stream_paged_ingest_audited(
         .option("fetch_size", fetch_size)
         .load()
     )
-    src_cols = list(src.columns)
-    enveloped = with_envelope(src, src_system_code,
-                              load_dttm=load_dttm or dt.datetime.now(),
-                              row_hash=row_hash)
-    names = tech_column_names(src_cols)
-    out = (
-        enveloped
-        .withColumn(names["row_hash_iceberg"],
-                    F.expr(row_hash_sql_expr(src.schema, src_cols)))
-        .withColumn("load_month",
-                    F.date_format(F.col(names["load_dttm"]), "yyyy-MM"))
-    )
-    reports: list = []
-    q = (
-        out.writeStream
-        .foreachBatch(_audited_batch_sink(spark, target_dir, names, reports,
-                                          fail_on_consistency_error))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return reports
+    return stream_ingest(
+        src, target_dir, checkpoint_dir, src_system_code=src_system_code,
+        load_dttm=load_dttm, fail_on_consistency_error=fail_on_consistency_error,
+        row_hash=row_hash)

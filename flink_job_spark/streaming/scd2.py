@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_job_spark.operators.diff import scd2_apply
-from flink_job_spark.streaming.ingest import stream_snapshot_source
+from flink_job_spark.streaming import with_file_cap
 
 _GEN_RE = re.compile(r"^gen=(\d+)$")
 
@@ -65,7 +65,7 @@ def scd2_stream_apply(
     # one snapshot file per micro-batch: a multi-file batch would union two
     # FULL snapshots (two rows per key) and corrupt the dimension; the option
     # must sit on the SOURCE — on writeStream it is silently ignored
-    src = stream_snapshot_source(spark, src_dir, schema, max_files_per_trigger=1)
+    src = with_file_cap(spark.readStream.schema(schema), 1).parquet(src_dir)
     out_cols = [*key_cols, *attr_cols, "valid_from", "valid_to", "is_current"]
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:

@@ -212,20 +212,47 @@ def test_scd2_apply_operator(spark):
     }
 
 
-def test_ingest_audits_renamed_hash_columns_on_collision(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("mode", ["batch", "stream"])
+def test_ingest_audits_renamed_hash_columns_on_collision(spark, sf_dir, tmp_path, mode):
     """A source that already owns a row_hash column: the envelope renames the
-    canonical hashes to __row_hash/__row_hash_iceberg, and the audit must
-    compare THOSE — comparing the source's own column would fail every row."""
+    canonical source-side hash to __row_hash (row_hash_iceberg does not
+    collide and keeps its name), and the audit must compare THOSE —
+    comparing the source's own column would fail every row. The batch
+    snapshot and every stream epoch share the one stamp builder."""
     from flink_job_spark.pipeline import IngestConfig, snapshot_ingest
     from flink_job_spark.sources.tables import load_table
+    from flink_job_spark.streaming.ingest import stream_ingest
 
     nat = load_table(spark, sf_dir, "nation").withColumn(
         "row_hash", F.lit("user-data-not-ours"))
-    res = snapshot_ingest(
-        spark, nat, "nation_coll", str(tmp_path / "tgt"),
-        "n_nationkey", config=IngestConfig())
-    assert res.error is None, res.error
-    assert res.report is not None and res.report.ok, (
-        res.report.hash_mismatches if res.report else None)
-    t = spark.read.parquet(str(tmp_path / "tgt"))
-    assert "__row_hash" in t.columns and "row_hash" in t.columns
+    tgt = str(tmp_path / "tgt")
+    if mode == "batch":
+        res = snapshot_ingest(
+            spark, nat, "nation_coll", tgt, "n_nationkey", config=IngestConfig())
+        assert res.error is None, res.error
+        assert res.report is not None and res.report.ok, (
+            res.report.hash_mismatches if res.report else None)
+    else:
+        src = str(tmp_path / "src")
+        nat.write.parquet(src)
+        ledger = stream_ingest(spark.readStream.schema(nat.schema).parquet(src),
+                               tgt, str(tmp_path / "ckpt"))
+        assert ledger and all(r.ok for r in ledger), ledger
+        assert sum(r.target_count for r in ledger) == nat.count()
+    t = spark.read.parquet(tgt)
+    assert {"__row_hash", "row_hash", "row_hash_iceberg"} <= set(t.columns)
+    assert "__row_hash_iceberg" not in t.columns
+
+
+def test_spark_entry_stamps_and_audits_lineitem(spark):
+    """The flagship ``entry`` plan: one row that counts every lineitem row
+    of the fixture it reads, with both independent row hashes in agreement."""
+    import importlib
+
+    out = importlib.import_module("__spark_entry__").entry(spark)
+    files = out.inputFiles()
+    assert files and all("lineitem" in f for f in files), files
+    rows = out.collect()
+    assert len(rows) == 1
+    assert rows[0]["target_count"] == spark.read.parquet(*files).count() > 0
+    assert rows[0]["hash_mismatches"] == 0

@@ -8,7 +8,8 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from flink_job_spark.sources.tables import load_table
-from flink_job_spark.streaming.ingest import stream_snapshot_ingest
+from flink_job_spark.streaming import with_file_cap
+from flink_job_spark.streaming.ingest import stream_ingest
 from flink_job_spark.streaming.windows import (
     stream_dedup,
     stream_session_agg,
@@ -34,15 +35,15 @@ def test_stream_ingest_and_resume(spark, sf_dir, tmp_path):
     rest = li.filter(F.col("l_orderkey") > 700)
 
     first.write.mode("overwrite").parquet(src)
-    stream_snapshot_ingest(spark, src, first.schema, tgt, ckpt,
-                           load_dttm=dt.datetime(2026, 1, 1))
+    stream_ingest(spark.readStream.schema(first.schema).parquet(src), tgt, ckpt,
+                  load_dttm=dt.datetime(2026, 1, 1))
     t1 = spark.read.parquet(tgt)
     assert t1.count() == first.count()
 
     # "new data arrives" → second availableNow run processes ONLY new files
     rest.write.mode("append").parquet(src)
-    stream_snapshot_ingest(spark, src, first.schema, tgt, ckpt,
-                           load_dttm=dt.datetime(2026, 1, 1))
+    stream_ingest(spark.readStream.schema(first.schema).parquet(src), tgt, ckpt,
+                  load_dttm=dt.datetime(2026, 1, 1))
     t2 = spark.read.parquet(tgt)
     assert t2.count() == li.count()  # no reprocessing, no loss
     # dual hashes agree on the streamed envelope too
@@ -53,13 +54,12 @@ def test_stream_ingest_and_resume(spark, sf_dir, tmp_path):
 def test_stream_audited_ingest_clean(spark, sf_dir, tmp_path):
     """foreachBatch audit: a clean stream writes + audits every micro-batch
     and the ledger shows zero mismatches."""
-    from flink_job_spark.streaming.ingest import stream_snapshot_ingest_audited
-
     src, tgt, ckpt = (str(tmp_path / p) for p in ("src", "tgt", "ckpt"))
     nat = load_table(spark, sf_dir, "nation")
     nat.write.mode("overwrite").parquet(src)
-    reports = stream_snapshot_ingest_audited(
-        spark, src, nat.schema, tgt, ckpt, load_dttm=dt.datetime(2026, 1, 1))
+    reports = stream_ingest(
+        spark.readStream.schema(nat.schema).parquet(src), tgt, ckpt,
+        load_dttm=dt.datetime(2026, 1, 1))
     assert reports and all(r.ok for r in reports)
     assert sum(r.target_count for r in reports) == nat.count()
     t = spark.read.parquet(tgt)
@@ -75,7 +75,6 @@ def test_stream_audited_ingest_catches_corruption(spark, sf_dir, tmp_path):
     from pyspark.sql.streaming import StreamingQueryException
 
     from flink_job_spark.functions.hashing import TOKEN_SEP, hash_token_column
-    from flink_job_spark.streaming.ingest import stream_snapshot_ingest_audited
 
     src = str(tmp_path / "src")
     nat = load_table(spark, sf_dir, "nation")
@@ -92,14 +91,16 @@ def test_stream_audited_ingest_catches_corruption(spark, sf_dir, tmp_path):
     bad_hash = F.md5(F.concat_ws(TOKEN_SEP, *tokens))
 
     with pytest.raises(StreamingQueryException, match="(?i)consistency"):
-        stream_snapshot_ingest_audited(
-            spark, src, nat.schema, str(tmp_path / "tgt1"), str(tmp_path / "c1"),
+        stream_ingest(
+            spark.readStream.schema(nat.schema).parquet(src),
+            str(tmp_path / "tgt1"), str(tmp_path / "c1"),
             load_dttm=dt.datetime(2026, 1, 1), row_hash=bad_hash)
 
     # the failed batch's offsets never committed: the checkpoint has no
     # committed batch, so a clean re-run reprocesses everything
-    reports = stream_snapshot_ingest_audited(
-        spark, src, nat.schema, str(tmp_path / "tgt2"), str(tmp_path / "c2"),
+    reports = stream_ingest(
+        spark.readStream.schema(nat.schema).parquet(src),
+        str(tmp_path / "tgt2"), str(tmp_path / "c2"),
         load_dttm=dt.datetime(2026, 1, 1), row_hash=bad_hash,
         fail_on_consistency_error=False)
     assert reports and any(not r.ok for r in reports)
@@ -308,9 +309,8 @@ def test_stream_rate_limited_ingest_bounded_batches(spark, sf_dir, tmp_path):
     li = load_table(spark, sf_dir, "lineitem")
     li.repartition(8).write.mode("overwrite").parquet(src)
 
-    stream_snapshot_ingest(spark, src, li.schema, tgt, ckpt,
-                           load_dttm=dt.datetime(2026, 1, 1),
-                           max_files_per_trigger=2)
+    stream_ingest(with_file_cap(spark.readStream.schema(li.schema), 2).parquet(src),
+                  tgt, ckpt, load_dttm=dt.datetime(2026, 1, 1))
     got = spark.read.parquet(tgt)
     assert got.count() == li.count()
     assert got.filter(F.lower("row_hash") != F.lower("row_hash_iceberg")).count() == 0
@@ -642,7 +642,6 @@ def test_stream_audited_ingest_retry_does_not_duplicate(spark, sf_dir, tmp_path)
     from pyspark.sql.streaming import StreamingQueryException
 
     from flink_job_spark.functions.hashing import TOKEN_SEP, hash_token_column
-    from flink_job_spark.streaming.ingest import stream_snapshot_ingest_audited
 
     src, tgt, ckpt = (str(tmp_path / p) for p in ("src", "tgt", "ckpt"))
     nat = load_table(spark, sf_dir, "nation")
@@ -659,8 +658,8 @@ def test_stream_audited_ingest_retry_does_not_duplicate(spark, sf_dir, tmp_path)
     import datetime as dtmod
     for _ in range(3):   # fail, retry, retry — same checkpoint, same target
         with pytest.raises(StreamingQueryException):
-            stream_snapshot_ingest_audited(
-                spark, src, nat.schema, tgt, ckpt,
+            stream_ingest(
+                spark.readStream.schema(nat.schema).parquet(src), tgt, ckpt,
                 load_dttm=dtmod.datetime(2026, 1, 1), row_hash=bad_hash)
     t = spark.read.parquet(tgt)
     assert t.count() == nat.count(), "retries appended duplicate copies"
