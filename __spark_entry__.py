@@ -23,7 +23,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     from pyspark.sql import functions as F
 
-    from flink_job_spark.operators.audit import hash_mismatch_flag
+    from flink_job_spark.operators.audit import audit_aggregate
     from flink_job_spark.operators.envelope import DEFAULT_SRC_SYSTEM, stamp
     from flink_job_spark.operators.snapshot import freeze_cutoff, snapshot_scan
     from flink_job_spark.session import ensure_session_confs
@@ -34,12 +34,8 @@ def entry(spark: SparkSession) -> DataFrame:
     cutoff = freeze_cutoff(li, "l_orderkey")
     scan = snapshot_scan(li, list(li.columns), "l_orderkey", cutoff, ordered=False)
     stamped, names = stamp(scan, DEFAULT_SRC_SYSTEM, None, None)
-    mismatch = hash_mismatch_flag(names["row_hash"], names["row_hash_iceberg"])
-    return stamped.agg(
-        F.count(F.lit(1)).alias("target_count"),
-        F.coalesce(F.sum(mismatch), F.lit(0)).alias("hash_mismatches"),
-        F.lit(str(cutoff)).alias("cutoff"),
-    )
+    return (audit_aggregate(stamped, None, names["row_hash"], names["row_hash_iceberg"])
+            .withColumn("cutoff", F.lit(str(cutoff))))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

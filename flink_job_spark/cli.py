@@ -85,12 +85,15 @@ def _load_jdbc_table(spark, url, table, key_override, args, props):
         key = (key_override
                or detect_primary_key(spark, url, table, props)
                or infos[0].name)  # explicit → PK → first column (mis:231-242)
-        cutoff = read_watermark_value(spark, url, table, key, properties=props)
         bounds = None
         if args.parallelism > 1:
+            # one MIN, MAX statement freezes the cutoff AND the partition bounds
             b = read_key_bounds(spark, url, table, key, properties=props)
+            cutoff = None if b is None else b[1]
             if b is not None and all(isinstance(x, (int, float)) for x in b):
-                bounds = (b[0], b[1])
+                bounds = b
+        else:
+            cutoff = read_watermark_value(spark, url, table, key, properties=props)
         by_name = {c.name: c for c in infos}
         src = JdbcSnapshotSource(
             url, table, [c.name for c in infos], key, cutoff=cutoff,

@@ -21,7 +21,7 @@ from flink_job_spark.functions.hashing import (
     row_hash_column,
     row_hash_sql_expr,
 )
-from flink_job_spark.operators.audit import hash_mismatch_flag, point_lookup
+from flink_job_spark.operators.audit import audit_aggregate, point_lookup
 from flink_job_spark.operators.envelope import with_envelope
 from flink_job_spark.operators.snapshot import freeze_cutoff, resume_predicate, snapshot_scan
 from flink_job_spark.queries import register
@@ -205,11 +205,7 @@ WITH corrupted AS (
     tags=("agg", "audit"),
 )
 def q_hash_mismatch_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pair = _corrupted_pair(spark, sf_dir)
-    return pair.agg(
-        F.count(F.lit(1)).alias("target_count"),
-        F.coalesce(F.sum(hash_mismatch_flag()), F.lit(0)).alias("hash_mismatches"),
-    )
+    return audit_aggregate(_corrupted_pair(spark, sf_dir))
 
 
 @register(

@@ -1021,6 +1021,14 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap stays as the outer guard with the same semantics. Evidence
     scoring is unchanged and engine-exact: integer levenshtein,
     DECIMAL(12,2) balance delta, string segment equality."""
+    # The 1-deletion neighborhood is COMPLETE only for lev <= 1; a silent
+    # bump of ER_NAME_MAX_DIST would drop pairs instead of degrading
+    # gracefully like the old self-join did (ADVICE r9) — fail loudly, and
+    # before anything is cached.
+    if ER_NAME_MAX_DIST != 1:
+        raise ValueError(
+            "deletion-neighborhood candidate keys assume lev <= 1; raising "
+            "ER_NAME_MAX_DIST requires deeper deletion keys")
     c0 = (
         load_table(spark, sf_dir, "customer")
         .select("c_custkey", "c_name", "c_mktsegment", "c_acctbal",
@@ -1032,12 +1040,6 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("n") <= ER_MAX_BLOCK)
             .select("c_nationkey", "blk"))
     c = c0.join(F.broadcast(ok), ["c_nationkey", "blk"]).persist()
-    # The 1-deletion neighborhood is COMPLETE only for lev <= 1; a silent
-    # bump of ER_NAME_MAX_DIST would drop pairs instead of degrading
-    # gracefully like the old self-join did (ADVICE r9) — fail loudly.
-    assert ER_NAME_MAX_DIST == 1, (
-        "deletion-neighborhood candidate keys assume lev <= 1; raising "
-        "ER_NAME_MAX_DIST requires deeper deletion keys")
     # deletion-neighborhood keys: the name itself + every 1-char deletion
     del_keys = F.array_union(
         F.array(F.col("c_name")),

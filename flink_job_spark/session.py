@@ -13,6 +13,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """A quarter of MemTotal, capped at 24g: a fixed 24g heap let one long
+    test session outgrow a small host and get OOM-killed."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = int(next(ln for ln in f if ln.startswith("MemTotal:")).split()[1])
+    except (OSError, StopIteration, ValueError):
+        return "24g"
+    return f"{min(kib // 4096, 24 * 1024)}m"
+
+
 def get_spark(app_name: str = "flink_job_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
@@ -25,9 +36,10 @@ def get_spark(app_name: str = "flink_job_spark", cpus: int | None = None) -> Spa
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # local[32] runs everything in the driver JVM; 8g showed multi-second
-        # GC spikes on random queries at sf0.1 (the host has 128 GiB)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # local mode runs everything in the driver JVM; 8g showed multi-second
+        # GC spikes on random queries at sf0.1 on a 128 GiB host
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         # the driver testdata stores `events.ts` as parquet TIMESTAMP(NANOS)
         # which Spark only reads via this legacy long mapping

@@ -98,6 +98,27 @@ def detect_primary_key(
         return None
 
 
+def _query_row(spark: SparkSession, url: str, sql: str, ncols: int,
+               properties: dict[str, str] | None) -> tuple | None:
+    """First row of a one-row query as Python values, None if it is empty."""
+    conn = _connect(spark, url, properties)
+    try:
+        st = conn.createStatement()
+        try:
+            rs = st.executeQuery(sql)
+            try:
+                if not rs.next():
+                    return None
+                return tuple(_from_java(rs.getObject(i))
+                             for i in range(1, ncols + 1))
+            finally:
+                rs.close()
+        finally:
+            st.close()
+    finally:
+        conn.close()
+
+
 def read_watermark_value(
     spark: SparkSession,
     url: str,
@@ -109,23 +130,9 @@ def read_watermark_value(
     """Freeze the snapshot cutoff: SELECT MAX(order_col) at job start
     (mis:628-650). Runs as one scalar query on the source."""
     q = lambda n: quote_source_identifier(n, quote)  # noqa: E731
-    sql = f"SELECT MAX({q(order_col)}) FROM {q(table)}"
-    conn = _connect(spark, url, properties)
-    try:
-        st = conn.createStatement()
-        try:
-            rs = st.executeQuery(sql)
-            try:
-                if not rs.next():
-                    return None
-                v = rs.getObject(1)
-                return _from_java(v)
-            finally:
-                rs.close()
-        finally:
-            st.close()
-    finally:
-        conn.close()
+    row = _query_row(spark, url, f"SELECT MAX({q(order_col)}) FROM {q(table)}",
+                     1, properties)
+    return None if row is None else row[0]
 
 
 def read_key_bounds(
@@ -137,28 +144,14 @@ def read_key_bounds(
     properties: dict[str, str] | None = None,
 ) -> tuple[Any, Any] | None:
     """(MIN, MAX) of the order key — the partition bounds for the parallel
-    key-range read (the scalable successor of the reference's single cursor)."""
+    key-range read (the scalable successor of the reference's single cursor).
+    MAX is also the snapshot cutoff, so one statement can freeze both."""
     q = lambda n: quote_source_identifier(n, quote)  # noqa: E731
-    sql = (f"SELECT MIN({q(order_col)}), MAX({q(order_col)}) "
-           f"FROM {q(table)}")
-    conn = _connect(spark, url, properties)
-    try:
-        st = conn.createStatement()
-        try:
-            rs = st.executeQuery(sql)
-            try:
-                if not rs.next():
-                    return None
-                lo, hi = _from_java(rs.getObject(1)), _from_java(rs.getObject(2))
-                if lo is None or hi is None:
-                    return None
-                return lo, hi
-            finally:
-                rs.close()
-        finally:
-            st.close()
-    finally:
-        conn.close()
+    row = _query_row(spark, url, f"SELECT MIN({q(order_col)}), MAX({q(order_col)}) "
+                                 f"FROM {q(table)}", 2, properties)
+    if row is None or None in row:
+        return None
+    return row
 
 
 def _from_java(v: Any) -> Any:

@@ -1,6 +1,20 @@
-"""Streaming twins of the batch operators (see SURVEY.md §2 row 40-43)."""
+"""Streaming twins of the batch operators (see SURVEY.md §2 row 40-43).
+
+Each twin is kept as the batch-equals-stream proof of a registry key that
+stays oracle-checked (tests/test_streaming.py). All ``foreachBatch`` sinks run
+on one exactly-once mechanism, offsets commit only after the epoch's effect
+is durable (mis:1019-1059, 151-160), spelled out once: :func:`drain` (the
+availableNow drive loop), :func:`write_epoch` (the replay-idempotent epoch
+write), ``scd2.generation_sink`` (the generation-versioned state fold) and
+``dedup.admission_sink`` (admission against a persistent key store).
+"""
 
 from __future__ import annotations
+
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 def with_file_cap(reader, max_files_per_trigger: int | None):
@@ -10,3 +24,30 @@ def with_file_cap(reader, max_files_per_trigger: int | None):
     if max_files_per_trigger is not None:
         return reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader
+
+
+def drain(stream_df: DataFrame, sink: Callable[[DataFrame, int], None],
+          checkpoint_dir: str) -> None:
+    """Drain all input available now through ``sink`` (a ``foreachBatch``
+    body), then stop. The checkpoint makes it resumable: a re-run processes
+    only input that arrived since, and an epoch whose sink raised is
+    reprocessed on restart because its offsets never committed."""
+    (stream_df.writeStream
+        .foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination())
+
+
+def write_epoch(df: DataFrame, batch_id: int, out_dir: str,
+                *partition_cols: str) -> None:
+    """Write one epoch under ``out_dir/batch_id=N[/...]`` with dynamic
+    partition overwrite: a REPLAYED epoch (crash before its offsets commit)
+    overwrites its own partition instead of appending a duplicate copy."""
+    (df.withColumn("batch_id", F.lit(batch_id))
+        .write
+        .partitionBy("batch_id", *partition_cols)
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite")
+        .parquet(out_dir))

@@ -30,14 +30,12 @@ BATCH's keys, never the corpus' — the key store is the big bucketed side).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from flink_job_spark.streaming import with_file_cap
-from flink_job_spark.streaming.dedup import _classify_batch
+from flink_job_spark.streaming import drain, with_file_cap
+from flink_job_spark.streaming.dedup import _classify_batch, admission_sink
 
 WARC_DOC_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType(), False),
@@ -116,6 +114,15 @@ def warc_visible_extract(docs: DataFrame) -> DataFrame:
     return docs.mapInPandas(run, schema=EXTRACT_SCHEMA)
 
 
+def _classify_extracted(extracted: DataFrame,
+                        seen: DataFrame | None) -> DataFrame:
+    """Every extracted document with its admission verdict: only documents
+    with clean extracted text are classified, the rest carry null verdicts."""
+    clean = extracted.filter(F.col("extract_error").isNull()
+                             & F.col("text").isNotNull())
+    return extracted.join(_classify_batch(clean, seen), "doc_id", "left")
+
+
 def stream_crawl_extract(
     spark: SparkSession,
     src_dir: str,
@@ -127,49 +134,10 @@ def stream_crawl_extract(
     """Drain available WARC-document files (availableNow), extracting and
     admitting each micro-batch. Output partitions: ``out/batch_id=N`` with
     the extracted columns + content_key + verdict. Replay-safe exactly as
-    streaming/dedup.py (partition overwrite, duplicate-tolerant key store,
-    per-batch manifest partition)."""
-    keys_dir = os.path.join(state_dir, "keys")
-    manifest_dir = os.path.join(state_dir, "batches")
-
-    def admit(batch_df: DataFrame, batch_id: int) -> None:
-        bdir = os.path.join(manifest_dir, f"batch_id={batch_id}")
-        try:
-            if spark.read.parquet(bdir).limit(1).count() > 0:
-                return                # replayed completed batch: no-op
-        except Exception:
-            pass
-        extracted = warc_visible_extract(batch_df).persist()
-        clean = extracted.filter(F.col("extract_error").isNull()
-                                 & F.col("text").isNotNull())
-        seen = None
-        try:
-            seen = (spark.read.parquet(keys_dir)
-                    .filter(F.col("src_batch_id") != batch_id))
-        except Exception:
-            pass
-        verdicts = _classify_batch(clean, seen)
-        out = (extracted.join(verdicts, "doc_id", "left")
-               .withColumn("batch_id", F.lit(batch_id)))
-        (out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(out_dir))
-        (verdicts.filter(F.col("verdict") == "unique")
-                 .select("content_key")
-                 .withColumn("src_batch_id", F.lit(batch_id))
-                 .write.mode("append").parquet(keys_dir))
-        (spark.createDataFrame([(batch_id,)], "done long")
-              .write.mode("overwrite").parquet(bdir))
-        extracted.unpersist()
-
-    q = (
-        with_file_cap(spark.readStream.schema(WARC_DOC_SCHEMA),
-                      max_files_per_trigger)
-        .parquet(src_dir)
-        .writeStream
-        .foreachBatch(admit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    streaming/dedup.py: the same admission protocol runs on the extracted
+    documents."""
+    src = with_file_cap(spark.readStream.schema(WARC_DOC_SCHEMA),
+                        max_files_per_trigger).parquet(src_dir)
+    drain(warc_visible_extract(src),
+          admission_sink(spark, state_dir, out_dir, _classify_extracted),
+          checkpoint_dir)

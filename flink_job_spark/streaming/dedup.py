@@ -12,7 +12,9 @@ construction, not by luck:
 * verdict output is written to ``out/batch_id=N`` with dynamic partition
   overwrite — a replayed batch overwrites its own partition, never doubles it;
 * the key store is append-only and duplicate-TOLERANT (admission joins are
-  semi-joins on DISTINCT keys), so a replayed append is harmless;
+  semi-joins on DISTINCT keys), so a replayed append is harmless; each key
+  carries the batch that admitted it, and a replayed batch ignores its own
+  keys, so its unique documents stay unique;
 * a batch manifest records completed batch ids; replays short-circuit.
 
 At 100 TB the key store is a bucketed table and the per-batch semi-join
@@ -22,14 +24,15 @@ same asymmetry as the batch operator."""
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from flink_job_spark.streaming import with_file_cap
 from flink_job_spark.functions.text import norm_text
+from flink_job_spark.streaming import drain, with_file_cap, write_epoch
 
 
 def _classify_batch(batch: DataFrame, seen_keys: DataFrame | None) -> DataFrame:
@@ -55,19 +58,18 @@ def _classify_batch(batch: DataFrame, seen_keys: DataFrame | None) -> DataFrame:
          .otherwise(F.lit("unique")).alias("verdict"))
 
 
-def stream_incremental_dedup(
+def admission_sink(
     spark: SparkSession,
-    src_dir: str,
-    schema: T.StructType,
     state_dir: str,
     out_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = 1,
-) -> None:
-    """Drain available document files (availableNow), classifying each
-    micro-batch against the persistent key store and appending its unique
-    keys to it. Restartable: offsets live in the streaming checkpoint, and
-    every foreachBatch effect is replay-safe (see module docstring)."""
+    classify: Callable[[DataFrame, DataFrame | None], DataFrame] = _classify_batch,
+) -> Callable[[DataFrame, int], None]:
+    """The replay-safe admission protocol as a ``foreachBatch`` body.
+    ``classify(batch_df, seen_keys)`` returns the epoch's output rows, each
+    with its ``content_key`` and ``verdict``; the output lands in
+    ``out_dir/batch_id=N`` and its 'unique' keys are appended to the key
+    store under ``state_dir``. Every step is replay-safe (module docstring);
+    the batch and the output are cached because each is read twice."""
     keys_dir = os.path.join(state_dir, "keys")
     manifest_dir = os.path.join(state_dir, "batches")
 
@@ -95,31 +97,39 @@ def stream_incremental_dedup(
                     .filter(F.col("src_batch_id") != batch_id))
         except Exception:
             pass
-        verdicts = _classify_batch(batch_df, seen).persist()
-        (verdicts.withColumn("batch_id", F.lit(batch_id))
-                 .write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("batch_id")
-                 .parquet(out_dir))
-        (verdicts.filter(F.col("verdict") == "unique")
-                 .select("content_key")
-                 .withColumn("src_batch_id", F.lit(batch_id))
-                 .write.mode("append").parquet(keys_dir))
-        (spark.createDataFrame([(batch_id,)], "done long")
-              .write.mode("overwrite").parquet(bdir))
-        verdicts.unpersist()
+        batch_df.persist()
+        out = classify(batch_df, seen).persist()
+        try:
+            write_epoch(out, batch_id, out_dir)
+            (out.filter(F.col("verdict") == "unique")
+                .select("content_key")
+                .withColumn("src_batch_id", F.lit(batch_id))
+                .write.mode("append").parquet(keys_dir))
+            (spark.createDataFrame([(batch_id,)], "done long")
+                  .write.mode("overwrite").parquet(bdir))
+        finally:
+            out.unpersist()
+            batch_df.unpersist()
 
-    q = (
-        with_file_cap(spark.readStream.schema(schema),
-                      max_files_per_trigger)
-        .parquet(src_dir)
-        .writeStream
-        .foreachBatch(admit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    return admit
+
+
+def stream_incremental_dedup(
+    spark: SparkSession,
+    src_dir: str,
+    schema: T.StructType,
+    state_dir: str,
+    out_dir: str,
+    checkpoint_dir: str,
+    max_files_per_trigger: int | None = 1,
+) -> None:
+    """Drain available document files (availableNow), classifying each
+    micro-batch against the persistent key store and appending its unique
+    keys to it. Restartable: offsets live in the streaming checkpoint, and
+    every foreachBatch effect is replay-safe (see module docstring)."""
+    src = with_file_cap(spark.readStream.schema(schema),
+                        max_files_per_trigger).parquet(src_dir)
+    drain(src, admission_sink(spark, state_dir, out_dir), checkpoint_dir)
 
 
 # --- streaming quality gate: per-batch declarative expectations ----------------------
@@ -163,14 +173,6 @@ def stream_quality_gate(
                 f"batch {batch_id} failed rules: "
                 + ", ".join(f"{r[1]} ({r[3]}/{r[2]})" for r in bad))
 
-    q = (
-        with_file_cap(spark.readStream.schema(schema),
-                      max_files_per_trigger)
-        .parquet(src_dir)
-        .writeStream
-        .foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    src = with_file_cap(spark.readStream.schema(schema),
+                        max_files_per_trigger).parquet(src_dir)
+    drain(src, gate, checkpoint_dir)

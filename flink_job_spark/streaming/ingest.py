@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from flink_job_spark.operators.audit import AuditReport, run_consistency_check
 from flink_job_spark.operators.envelope import DEFAULT_SRC_SYSTEM, stamp, with_load_month
 from flink_job_spark.pipeline import ConsistencyError
+from flink_job_spark.streaming import drain, write_epoch
 
 
 def stream_ingest(
@@ -59,37 +60,24 @@ def stream_ingest(
     Returns the per-batch :class:`AuditReport` ledger."""
     stamped, names = stamp(stream_df, src_system_code, load_dttm, None, row_hash)
     reports: list[AuditReport] = []
-    q = (
-        with_load_month(stamped, names).writeStream
-        .foreachBatch(_audited_batch_sink(stream_df.sparkSession, target_dir, names,
-                                          reports, fail_on_consistency_error))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(with_load_month(stamped, names),
+          _audited_batch_sink(stream_df.sparkSession, target_dir, names,
+                              reports, fail_on_consistency_error),
+          checkpoint_dir)
     return reports
 
 
 def _audited_batch_sink(spark: SparkSession, target_dir: str, names: dict,
                         reports: list, fail_on_consistency_error: bool):
-    """The write-and-audit ``foreachBatch`` body: idempotent
-    batch_id-partitioned dynamic overwrite, then audit what actually LANDED
-    (re-read from the sink) before the epoch's offsets may commit."""
+    """The write-and-audit ``foreachBatch`` body: replay-idempotent epoch
+    write (a retry after the ConsistencyError path overwrites its own
+    partition), then audit what actually LANDED (re-read from the sink)
+    before the epoch's offsets may commit."""
 
     def write_and_audit(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
-            # batch_id partition + dynamic overwrite: a REPLAYED batch (crash
-            # before offset commit, or the ConsistencyError path itself)
-            # overwrites its own partition instead of appending a duplicate
-            # copy per retry
-            (batch_df.withColumn("batch_id", F.lit(batch_id))
-                .write
-                .partitionBy("batch_id", "load_month")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(target_dir))
+            write_epoch(batch_df, batch_id, target_dir, "load_month")
             n = batch_df.count()
             # audit what actually LANDED: re-read the written partition so the
             # count half of the gate is real (auditing the in-memory batch

@@ -19,16 +19,14 @@ generation and re-merges onto the generation strictly older than itself.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_job_spark.functions.hashing import md5_u32
 from flink_job_spark.queries.sketch import KMV_K
-from flink_job_spark.streaming import with_file_cap
-from flink_job_spark.streaming.scd2 import latest_generation
+from flink_job_spark.streaming import drain, with_file_cap
+from flink_job_spark.streaming.scd2 import generation_sink, read_latest_generation
 
 
 def kmv_hash(col: str) -> F.Column:
@@ -68,33 +66,19 @@ def stream_kmv_sketches(
     """Drain available files (availableNow), folding each micro-batch's
     per-segment KMV into the generation-versioned state store."""
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
+    def fold(batch_df: DataFrame, batch_id: int,
+             prev: DataFrame | None) -> DataFrame:
         batch_kmv = _seg_sketches(batch_df, seg_col, value_col)
-        prev = latest_generation(state_root, before=batch_id)
-        if prev is not None:
-            state = spark.read.parquet(os.path.join(state_root, f"gen={prev}"))
-            merged = (
-                state.unionByName(batch_kmv)
-                     .groupBy("seg")
-                     .agg(_kmv_trim(F.flatten(F.collect_list("kmv")))
-                           .alias("kmv"))
-            )
-        else:
-            merged = batch_kmv
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_root, f"gen={batch_id}"))
+        if prev is None:
+            return batch_kmv
+        return (prev.unionByName(batch_kmv)
+                    .groupBy("seg")
+                    .agg(_kmv_trim(F.flatten(F.collect_list("kmv")))
+                          .alias("kmv")))
 
-    q = (
-        with_file_cap(spark.readStream.schema(schema),
-                      max_files_per_trigger)
-        .parquet(src_dir)
-        .writeStream
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    src = with_file_cap(spark.readStream.schema(schema),
+                        max_files_per_trigger).parquet(src_dir)
+    drain(src, generation_sink(spark, state_root, fold), checkpoint_dir)
 
 
 def kmv_estimates(spark: SparkSession, state_root: str) -> DataFrame:
@@ -102,10 +86,7 @@ def kmv_estimates(spark: SparkSession, state_root: str) -> DataFrame:
     |segments| input rows, zero source scans. est = (K-1)*2^32 / h_K, or
     the exact sketch size while the sketch isn't full (n < K => the sketch
     IS the distinct set)."""
-    gen = latest_generation(state_root)
-    if gen is None:
-        raise ValueError(f"no committed generation under {state_root}")
-    state = spark.read.parquet(os.path.join(state_root, f"gen={gen}"))
+    state = read_latest_generation(spark, state_root)
     n = F.size("kmv")
     hk = F.element_at("kmv", KMV_K)
     scale = float((KMV_K - 1) * 4294967296)

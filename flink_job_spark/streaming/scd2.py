@@ -22,13 +22,14 @@ from __future__ import annotations
 import datetime as dt
 import os
 import re
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_job_spark.operators.diff import scd2_apply
-from flink_job_spark.streaming import with_file_cap
+from flink_job_spark.streaming import drain, with_file_cap
 
 _GEN_RE = re.compile(r"^gen=(\d+)$")
 
@@ -42,6 +43,38 @@ def latest_generation(dim_root: str, before: int | None = None) -> int | None:
     if before is not None:
         gens = [g for g in gens if g < before]
     return max(gens, default=None)
+
+
+def generation_sink(
+    spark: SparkSession,
+    state_root: str,
+    step: Callable[[DataFrame, int, DataFrame | None], DataFrame],
+) -> Callable[[DataFrame, int], None]:
+    """The generation-versioned state fold as a ``foreachBatch`` body:
+    ``step(batch_df, batch_id, parent)`` builds the new state from the
+    micro-batch and the parent state (None for the first generation), and
+    the result is written to ``gen=<batch_id>``. The parent is the newest
+    generation strictly OLDER than the batch, so a replayed batch rebuilds
+    its own half-written generation from the same parent instead of folding
+    onto itself (which a non-idempotent merge like SCD2 would corrupt)."""
+
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        parent = latest_generation(state_root, before=batch_id)
+        prev = (None if parent is None
+                else spark.read.parquet(f"{state_root}/gen={parent}"))
+        (step(batch_df, batch_id, prev)
+            .write.mode("overwrite")  # retry-idempotent: own generation only
+            .parquet(f"{state_root}/gen={batch_id}"))
+
+    return fold
+
+
+def read_latest_generation(spark: SparkSession, state_root: str) -> DataFrame:
+    """The newest committed generation's state; raises ValueError if none."""
+    gen = latest_generation(state_root)
+    if gen is None:
+        raise ValueError(f"no committed generation under {state_root}")
+    return spark.read.parquet(f"{state_root}/gen={gen}")
 
 
 def scd2_stream_apply(
@@ -68,29 +101,18 @@ def scd2_stream_apply(
     src = with_file_cap(spark.readStream.schema(schema), 1).parquet(src_dir)
     out_cols = [*key_cols, *attr_cols, "valid_from", "valid_to", "is_current"]
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        load_ts = base_ts + dt.timedelta(days=int(batch_id))
+    def apply_batch(batch_df: DataFrame, batch_id: int,
+                    prev: DataFrame | None) -> DataFrame:
+        load_ts = base_ts + dt.timedelta(days=batch_id)
         snap = batch_df.select(*key_cols, *attr_cols)
-        parent = latest_generation(dim_root, before=int(batch_id))
-        if parent is None:
-            dim = snap.select(
+        if prev is None:
+            return snap.select(
                 *key_cols, *attr_cols,
                 F.lit(load_ts).cast("timestamp_ntz").alias("valid_from"),
                 F.lit(None).cast("timestamp_ntz").alias("valid_to"),
                 F.lit(True).alias("is_current"),
             )
-        else:
-            prev = spark.read.parquet(f"{dim_root}/gen={parent}")
-            dim = scd2_apply(prev, snap, key_cols, attr_cols, load_ts)
-        (dim.select(*out_cols)
-            .write.mode("overwrite")  # retry-idempotent: own generation only
-            .parquet(f"{dim_root}/gen={int(batch_id)}"))
+        return scd2_apply(prev, snap, key_cols, attr_cols,
+                          load_ts).select(*out_cols)
 
-    q = (
-        src.writeStream
-        .foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(src, generation_sink(spark, dim_root, apply_batch), checkpoint_dir)

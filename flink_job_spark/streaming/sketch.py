@@ -23,15 +23,13 @@ re-merges onto the generation strictly older than itself.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_job_spark.queries.sketch import HLL_LGK, iso_week_key
-from flink_job_spark.streaming import with_file_cap
-from flink_job_spark.streaming.scd2 import latest_generation
+from flink_job_spark.streaming import drain, with_file_cap
+from flink_job_spark.streaming.scd2 import generation_sink, read_latest_generation
 
 
 def _day_sketches(batch: DataFrame) -> DataFrame:
@@ -53,43 +51,25 @@ def stream_sketch_rollup(
     """Drain available event files (availableNow), folding each micro-batch's
     day sketches into the generation-versioned day-state store."""
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
+    def fold(batch_df: DataFrame, batch_id: int,
+             prev: DataFrame | None) -> DataFrame:
         batch_days = _day_sketches(batch_df)
-        prev = latest_generation(state_root, before=batch_id)
-        if prev is not None:
-            state = spark.read.parquet(os.path.join(state_root, f"gen={prev}"))
-            merged = (
-                state.unionByName(batch_days)
-                     .groupBy("day")
-                     .agg(F.hll_union_agg("sketch").alias("sketch"))
-            )
-        else:
-            merged = batch_days
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_root, f"gen={batch_id}"))
+        if prev is None:
+            return batch_days
+        return (prev.unionByName(batch_days)
+                    .groupBy("day")
+                    .agg(F.hll_union_agg("sketch").alias("sketch")))
 
-    q = (
-        with_file_cap(spark.readStream.schema(schema),
-                      max_files_per_trigger)
-        .parquet(src_dir)
-        .writeStream
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    src = with_file_cap(spark.readStream.schema(schema),
+                        max_files_per_trigger).parquet(src_dir)
+    drain(src, generation_sink(spark, state_root, fold), checkpoint_dir)
 
 
 def weekly_estimates(spark: SparkSession, state_root: str) -> DataFrame:
     """Answer 'distinct users per ISO week' from the day-sketch store alone —
     |days| input rows, zero event scans."""
-    gen = latest_generation(state_root)
-    if gen is None:
-        raise ValueError(f"no committed generation under {state_root}")
-    state = spark.read.parquet(os.path.join(state_root, f"gen={gen}"))
     return (
-        state.groupBy(iso_week_key("day").alias("week"))
+        read_latest_generation(spark, state_root).groupBy(iso_week_key("day").alias("week"))
              .agg(F.hll_sketch_estimate(F.hll_union_agg("sketch"))
                    .cast("bigint").alias("approx_users"))
     )
