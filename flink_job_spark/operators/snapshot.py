@@ -30,6 +30,20 @@ def freeze_cutoff(df: DataFrame, order_col: str) -> Any:
     return df.agg(F.max(order_col).alias("w")).first()["w"]
 
 
+def freeze_cut(df: DataFrame, order_col: str) -> tuple[Any, int]:
+    """The watermark and the baseline source count in ONE pass:
+    ``MAX(k), COUNT(k)`` — the reference's MAX (mis:628-643) and its later
+    ``COUNT(1) WHERE k <= cutoff`` (mis:1362-1383) read as one consistent cut.
+
+    The count is exact: every non-null key is ``<=`` its max (Spark orders
+    NaN above every other double and NaN = NaN, so a NaN max admits every
+    row), and a NULL key fails ``k <= cutoff`` just as COUNT(k) skips it.
+    An empty or all-NULL key column yields ``(None, 0)``.
+    """
+    row = df.agg(F.max(order_col).alias("w"), F.count(order_col).alias("n")).first()
+    return row["w"], row["n"]
+
+
 def cutoff_predicate(order_col: str, cutoff: Any) -> Column:
     """``order_col <= cutoff``; empty table → contradiction (mis:645-657)."""
     if cutoff is None:

@@ -2,16 +2,16 @@
 reference's per-table flow (mis:202-297) + post-load audit (mis:1264-1331).
 
 Per table:
-1. freeze cutoff MAX(order_col)                       (mis:628-643)
-2. baseline source COUNT under cutoff                 (mis:1362-1383)
-3. snapshot scan: explicit columns, cutoff predicate  (mis:1076-1088)
-4. stamp the 11-tech-column envelope; row_hash via the Column-expression
+1. freeze the cut: cutoff MAX(order_col) and the baseline source COUNT under
+   it from ONE aggregate pass (mis:628-643 + mis:1362-1383)
+2. snapshot scan: explicit columns, cutoff predicate  (mis:1076-1088)
+3. stamp the 11-tech-column envelope; row_hash via the Column-expression
    implementation                                     (mis:1107-1119)
-5. write parquet partitioned by month(load_dttm), zstd — the local stand-in
+4. write parquet partitioned by month(load_dttm), zstd — the local stand-in
    for the Iceberg DDL (month partitioning mis:905, zstd mis:907, 512 MB
    target files mis:908); computing row_hash_iceberg DURING the write via the
    independent SQL-string implementation              (mis:918-939)
-6. re-read the target and run the COUNT+mismatch audit (mis:1385-1411)
+5. re-read the target and run the COUNT+mismatch audit (mis:1385-1411)
 
 Failure isolation: per-table try/except, like the reference's skip-on-failure
 loop (mis:207-224, 309-359).
@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from flink_job_spark.operators.audit import AuditReport, run_consistency_check
 from flink_job_spark.operators.envelope import DEFAULT_SRC_SYSTEM, stamp, with_load_month
-from flink_job_spark.operators.snapshot import cutoff_predicate, freeze_cutoff, snapshot_scan
+from flink_job_spark.operators.snapshot import cutoff_predicate, freeze_cut, snapshot_scan
 from flink_job_spark.types import ColumnInfo, infos_from_schema, quote_identifier
 
 log = logging.getLogger(__name__)
@@ -133,8 +133,7 @@ def snapshot_ingest(
 ) -> IngestResult:
     cfg = config or IngestConfig()
     try:
-        cutoff = freeze_cutoff(source, order_col)
-        src_count = source.filter(cutoff_predicate(order_col, cutoff)).count()
+        cutoff, src_count = freeze_cut(source, order_col)
 
         scan = snapshot_scan(source, list(source.columns), order_col, cutoff,
                              floor=floor, ordered=False)

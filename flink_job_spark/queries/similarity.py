@@ -348,6 +348,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned by cell id and a probe touches ~nprobe/n_cells of the data).
     Centroids here are a deterministic id-sample (q_ann_ivf_kmeans trains them
     with Lloyd iterations — identical plan shape, better centroid values)."""
+    _require_query_subset("IVF_CENTROIDS", IVF_CENTROIDS)
     e = _vecs(spark, sf_dir)
     cents = _collect_low_vecs(e, IVF_CENTROIDS)
     return _ivf_probe_plan(spark, e, cents, IVF_NPROBE,
@@ -362,12 +363,23 @@ def _pydot(a, b):
     return acc
 
 
+def _require_query_subset(limit_name: str, limit: int) -> None:
+    """The probe keys take their query vectors from the low-id sample they
+    already collected (vec_id < limit). More query vectors than that sample
+    holds would be dropped silently, so refuse before any Spark work."""
+    if N_QUERY_VECS > limit:
+        raise ValueError(
+            f"N_QUERY_VECS={N_QUERY_VECS} exceeds {limit_name}={limit}: the "
+            "query vectors must be a subset of the collected low-id sample")
+
+
 def _collect_low_vecs(e: DataFrame, n: int) -> list[tuple[int, list[float], float]]:
     """ONE collect of the deterministic low-id sample, shared by centroid
     init AND the query-vector probe set (N_QUERY_VECS <= IVF_CENTROIDS, so
-    the probe rows are a subset) — the r9 IVF keys paid two separate
-    collect jobs for overlapping constant-size row sets (guide §2.4:
-    fewer actions; bench-scale cost is job-count dominated)."""
+    the probe rows are a subset; _require_query_subset enforces it) — the
+    r9 IVF keys paid two separate collect jobs for overlapping
+    constant-size row sets (guide §2.4: fewer actions; bench-scale cost is
+    job-count dominated)."""
     rows = sorted(
         e.filter(F.col("vec_id") < n).select("vec_id", "v", "nv").collect(),
         key=lambda r: r["vec_id"],
@@ -567,6 +579,7 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample is collected ONCE and feeds both the Lloyd init and the probe's
     query-vector set (r10: two constant-size collect jobs folded into one;
     the query vectors are raw table rows either way, never re-trained)."""
+    _require_query_subset("IVF_CENTROIDS", IVF_CENTROIDS)
     e = _vecs(spark, sf_dir).persist()
     low = _collect_low_vecs(e, IVF_CENTROIDS)
     cents = kmeans_lite_centroids(spark, e, IVF_CENTROIDS, KMEANS_ITERS,
@@ -1158,6 +1171,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     recalls ~0.3 (random synthetic vectors quantize poorly at 16 codes),
     the rerank pass lifts what the candidate set retains — kmeans-trained
     books would share this exact plan shape with better books."""
+    _require_query_subset("PQ_CODES", PQ_CODES)
     e = _vecs(spark, sf_dir)
     # ONE collect of the low-id sample feeds both the codebooks
     # (vec_id < PQ_CODES) and the query-vector LUTs (vec_id < N_QUERY_VECS,

@@ -7,9 +7,14 @@ that SOURCE CONTRACT as a first-class Spark data source via the Python
 DataSource API (pyspark.sql.datasource, Spark 4): every page is an
 InputPartition, so page reads parallelize across executors instead of
 walking one driver-side cursor, and the same page math serves a
-SimpleDataSourceStreamReader whose offset log gives exactly-once resumable
+DataSourceStreamReader whose offset log gives exactly-once resumable
 ingestion — the reference's checkpoint semantics on Spark's own offset
 machinery.
+
+A page is one fetch of ``fetch_size`` keys and one Python task. Each task
+pays a fixed Python-worker set-up (about 0.3 CPU-s on a 4-CPU host), so the
+page size, not the row count, sets the fixed cost: both readers default to
+the reference's fetch size (``DEFAULT_FETCH_SIZE``, mis:83).
 
 Rows are deterministic functions of the key (id, padded payload, bucket),
 standing in for the remote table: the shape of the integration (options,

@@ -14,18 +14,25 @@ stream, the paged cursor), stamps it with the batch pipeline's own builder
 (:func:`~flink_job_spark.operators.envelope.stamp`) and writes and audits
 every epoch before its offsets commit. :func:`stream_paged_ingest_audited`
 is a thin wrapper that builds the paged-cursor source and calls it.
+
+The paged stream defaults to the reference's fetch size
+(``DEFAULT_FETCH_SIZE``, mis:83): a page is one fetch and one Python task, so
+a smaller page only adds fixed per-task cost.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from flink_job_spark.operators.audit import AuditReport, run_consistency_check
 from flink_job_spark.operators.envelope import DEFAULT_SRC_SYSTEM, stamp, with_load_month
 from flink_job_spark.pipeline import ConsistencyError
+from flink_job_spark.sources.paged import DEFAULT_FETCH_SIZE, register_paged_source
 from flink_job_spark.streaming import drain, write_epoch
 
 
@@ -72,28 +79,39 @@ def _audited_batch_sink(spark: SparkSession, target_dir: str, names: dict,
     """The write-and-audit ``foreachBatch`` body: replay-idempotent epoch
     write (a retry after the ConsistencyError path overwrites its own
     partition), then audit what actually LANDED (re-read from the sink)
-    before the epoch's offsets may commit."""
+    before the epoch's offsets may commit.
+
+    The epoch is read from its source once: its row count is an
+    ``Observation`` on the write itself, and the audit re-reads only the
+    epoch's own ``batch_id=N`` partition, so neither cost grows with the
+    number of epochs already in the target."""
 
     def write_and_audit(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            write_epoch(batch_df, batch_id, target_dir, "load_month")
-            n = batch_df.count()
-            # audit what actually LANDED: re-read the written partition so the
-            # count half of the gate is real (auditing the in-memory batch
-            # twice made delta == 0 by construction)
-            tgt = spark.read.parquet(target_dir).filter(
-                F.col("batch_id") == batch_id)
-            report = run_consistency_check(
-                f"batch:{batch_id}", n, tgt, None,
-                h1=names["row_hash"], h2=names["row_hash_iceberg"])
-            reports.append(report)
-            if not report.ok and fail_on_consistency_error:
-                raise ConsistencyError(f"batch:{batch_id}", report)
-        finally:
-            batch_df.unpersist()
+        obs = Observation()
+        write_epoch(batch_df.observe(obs, F.count(F.lit(1)).alias("rows")),
+                    batch_id, target_dir, "load_month")
+        report = run_consistency_check(
+            f"batch:{batch_id}", obs.get["rows"],
+            _read_epoch(spark, batch_df.schema, target_dir, batch_id), None,
+            h1=names["row_hash"], h2=names["row_hash_iceberg"])
+        reports.append(report)
+        if not report.ok and fail_on_consistency_error:
+            raise ConsistencyError(f"batch:{batch_id}", report)
 
     return write_and_audit
+
+
+def _read_epoch(spark: SparkSession, schema: StructType, target_dir: str,
+                batch_id: int) -> DataFrame:
+    """Re-read what epoch ``batch_id`` landed, with the schema it was written
+    with: an epoch without rows writes no data files to infer a schema from,
+    and no ``batch_id=N`` directory at all, which reads as empty."""
+    try:
+        return spark.read.schema(schema).parquet(f"{target_dir}/batch_id={batch_id}")
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return spark.createDataFrame([], schema)
 
 
 def stream_paged_ingest_audited(
@@ -101,7 +119,7 @@ def stream_paged_ingest_audited(
     cutoff: int,
     target_dir: str,
     checkpoint_dir: str,
-    fetch_size: int = 1000,
+    fetch_size: int = DEFAULT_FETCH_SIZE,
     src_system_code: str = "mis",
     load_dttm: dt.datetime | None = None,
     fail_on_consistency_error: bool = True,
@@ -121,8 +139,6 @@ def stream_paged_ingest_audited(
       reprocesses that epoch and the sink holds each key exactly once.
 
     Returns the per-batch :class:`AuditReport` ledger."""
-    from flink_job_spark.sources.paged import register_paged_source
-
     register_paged_source(spark)
     src = (
         spark.readStream.format("paged_cursor")
