@@ -1782,6 +1782,7 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BFS_MAX_HOPS = 3
 BFS_SEED_NATION = 0
+BFS_CHECKPOINT_EVERY = 4
 
 
 def bfs_levels(edges: DataFrame, seeds: DataFrame,
@@ -1792,15 +1793,15 @@ def bfs_levels(edges: DataFrame, seeds: DataFrame,
     frontier persists because it feeds both the visited union and the
     next expansion.
 
-    Lineage truncation (r5, VERDICT r4 #2): the visited frame gains one
-    union node per hop and the frontier chains a join per hop — the
-    pattern that stalled min-label components past ~15 driver rounds.
-    Every CC_CHECKPOINT_EVERY (8) hops both frames are localCheckpoint-ed
-    (eager) and the previous checkpoint's blocks released. At the shipped
-    BFS_MAX_HOPS=3 no checkpoint fires (bench plan unchanged); deep
-    traversals via tools/graph_ab.py are covered (A/B at 32 hops in
-    BASELINE.md)."""
-    from flink_job_spark.queries.dedup import CC_CHECKPOINT_EVERY
+    Lineage truncation: each hop's ``new`` anti-joins the whole visited
+    union, which holds every earlier ``new``, so the printed plan roughly
+    triples per hop (12 MB at hop 7 on a 64-node chain; the explain string
+    at an 8-hop checkpoint ran a 4 GB heap out). Every BFS_CHECKPOINT_EVERY
+    (4) hops both frames are localCheckpoint-ed (eager) and the previous
+    checkpoint's blocks released, so the returned frame is a checkpointed
+    visited set plus at most 4 hops of lineage. At the shipped
+    BFS_MAX_HOPS=3 no checkpoint fires (plan unchanged); deep traversals
+    via tools/graph_ab.py are covered."""
     from flink_job_spark.session import persistent_rdd_ids, unpersist_rdd_ids
 
     spark = seeds.sparkSession
@@ -1831,7 +1832,7 @@ def bfs_levels(edges: DataFrame, seeds: DataFrame,
                   .withColumn("lvl", F.lit(lvl)).persist())
         visited = visited.union(new)
         frontier = new.select("node")
-        if lvl % CC_CHECKPOINT_EVERY == 0 and lvl < max_hops:
+        if lvl % BFS_CHECKPOINT_EVERY == 0 and lvl < max_hops:
             before = persistent_rdd_ids(spark)
             visited = visited.localCheckpoint(eager=True)
             frontier = frontier.localCheckpoint(eager=True)
