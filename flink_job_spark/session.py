@@ -3,8 +3,8 @@
 The engine itself never assumes local mode — all operators are plain
 DataFrame lineage that scales with whatever cluster the session runs on.
 This factory only encodes the local-mode knobs (shuffle partitions ≈ cores,
-AQE on, UTC session timezone for oracle parity), the driver heap size and
-one JIT policy.
+AQE on, UTC session timezone for oracle parity), the driver heap size, one
+JIT policy and the Python executable of Spark's own Python processes.
 
 JIT policy (`JIT_POLICY`): a snapshot job is one-shot, like the reference's
 Flink job, so the driver JVM's warm-up never pays for itself. With HotSpot's
@@ -25,11 +25,34 @@ spark.driver.defaultJavaOptions=...` from the caller replaces it. It has no
 effect on a JVM that is already running: a session handed in by the driver
 contract (`__spark_entry__`), or `get_spark` when `getOrCreate` returns a
 live session.
+
+Worker Python (`WORKER_PYTHON`): Spark starts Python processes of its own
+for this engine: the `pyspark.daemon` and its task workers, the data-source
+planners (`create_data_source`, `plan_data_source_read`, ...) and one
+streaming source runner per paged-stream increment. It puts
+`$SPARK_HOME/python/lib/pyspark.zip` first on each one's PYTHONPATH, and
+the zip holds sources only, so every process compiled pyspark again: a cold
+import of `pyspark.daemon` or the source runner cost about 1.3 CPU-s from
+the zip and 0.35-0.4 CPU-s from the installed, byte-compiled package
+(4-CPU host). While `getOrCreate` starts the session, `get_spark` sets
+PYSPARK_PYTHON, which both the PySpark driver and the JVM read at launch,
+to `WORKER_PYTHON`, a launcher shipped in this package. The launcher runs
+the interpreter Spark would have run (the caller's PYSPARK_PYTHON, else
+`python3`) and moves Spark's two zips behind that interpreter's
+site-packages when its installed pyspark has the zip's version; otherwise
+it stands aside and Spark's order stays. `-m` and `-c` keep their meaning,
+the cwd first on sys.path. `get_spark` also stands aside where the launcher
+cannot run (not POSIX, or the file lost its executable bit). Like
+`JIT_POLICY`, this does nothing to a JVM that is already running: the
+driver contract's session keeps Spark's own worker Python. The caller's
+environment is restored when `get_spark` returns.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -37,6 +60,9 @@ JIT_POLICY = ("-XX:Tier4InvocationThreshold=100000 "
               "-XX:Tier4MinInvocationThreshold=60000 "
               "-XX:Tier4CompileThreshold=110000 "
               "-XX:Tier4BackEdgeThreshold=400000")
+
+WORKER_PYTHON = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                             "worker_python")
 
 
 def _default_driver_memory() -> str:
@@ -48,6 +74,26 @@ def _default_driver_memory() -> str:
     except (OSError, StopIteration, ValueError):
         return "24g"
     return f"{min(kib // 4096, 24 * 1024)}m"
+
+
+@contextmanager
+def _worker_python() -> Iterator[None]:
+    """PYSPARK_PYTHON -> `WORKER_PYTHON` while a session starts; the
+    launcher finds the caller's interpreter in SPARK_GRAFT_PYSPARK_PYTHON."""
+    saved = {k: os.environ.get(k)
+             for k in ("PYSPARK_PYTHON", "SPARK_GRAFT_PYSPARK_PYTHON")}
+    if os.name == "posix" and os.access(WORKER_PYTHON, os.X_OK):
+        os.environ["SPARK_GRAFT_PYSPARK_PYTHON"] = (saved["PYSPARK_PYTHON"]
+                                                    or "python3")
+        os.environ["PYSPARK_PYTHON"] = WORKER_PYTHON
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                os.environ.pop(k, None)
+            else:
+                os.environ[k] = v
 
 
 def get_spark(app_name: str = "flink_job_spark", cpus: int | None = None) -> SparkSession:
@@ -72,7 +118,8 @@ def get_spark(app_name: str = "flink_job_spark", cpus: int | None = None) -> Spa
         # which Spark only reads via this legacy long mapping
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    spark = builder.getOrCreate()
+    with _worker_python():
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -50,6 +50,16 @@ class PagePartition(InputPartition):
         self.end = end      # exclusive key
 
 
+def check_fetch_size(value) -> int:
+    """Validate ``fetch_size`` for both readers and the stream's driver-side
+    entry point. A page of 0 or fewer keys never advances, and the stream
+    source runner would loop forever."""
+    n = int(value)
+    if n <= 0:
+        raise ValueError(f"fetch_size must be positive, got {n}")
+    return n
+
+
 def _pages(floor: int, cutoff: int, fetch_size: int) -> list[PagePartition]:
     """Key-range pages of ``fetch_size`` keys over (floor, cutoff]."""
     lo = floor + 1
@@ -65,9 +75,8 @@ class PagedCursorReader(DataSourceReader):
     def __init__(self, options):
         self.floor = int(options.get("floor", -1))
         self.cutoff = int(options.get("cutoff", 0))
-        self.fetch_size = int(options.get("fetch_size", DEFAULT_FETCH_SIZE))
-        if self.fetch_size <= 0:
-            raise ValueError("fetch_size must be positive")
+        self.fetch_size = check_fetch_size(
+            options.get("fetch_size", DEFAULT_FETCH_SIZE))
 
     def partitions(self) -> Sequence[InputPartition]:
         # Spark requires at least one partition; an empty (floor, cutoff]
@@ -87,7 +96,8 @@ class PagedCursorStreamReader(DataSourceStreamReader):
 
     def __init__(self, options):
         self.cutoff = int(options.get("cutoff", 0))
-        self.fetch_size = int(options.get("fetch_size", DEFAULT_FETCH_SIZE))
+        self.fetch_size = check_fetch_size(
+            options.get("fetch_size", DEFAULT_FETCH_SIZE))
 
     def initialOffset(self) -> dict:
         return {"last_key": -1}

@@ -32,7 +32,11 @@ from pyspark.sql.types import StructType
 from flink_job_spark.operators.audit import AuditReport, run_consistency_check
 from flink_job_spark.operators.envelope import DEFAULT_SRC_SYSTEM, stamp, with_load_month
 from flink_job_spark.pipeline import ConsistencyError
-from flink_job_spark.sources.paged import DEFAULT_FETCH_SIZE, register_paged_source
+from flink_job_spark.sources.paged import (
+    DEFAULT_FETCH_SIZE,
+    check_fetch_size,
+    register_paged_source,
+)
 from flink_job_spark.streaming import drain, write_epoch
 
 
@@ -138,7 +142,9 @@ def stream_paged_ingest_audited(
       foreachBatch BEFORE the epoch's offsets commit, so a corrected restart
       reprocesses that epoch and the sink holds each key exactly once.
 
-    Returns the per-batch :class:`AuditReport` ledger."""
+    Returns the per-batch :class:`AuditReport` ledger. A ``fetch_size`` below
+    1 raises ``ValueError`` before the query starts."""
+    check_fetch_size(fetch_size)
     register_paged_source(spark)
     src = (
         spark.readStream.format("paged_cursor")

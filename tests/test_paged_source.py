@@ -5,9 +5,15 @@ machinery."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from flink_job_spark.sources.paged import register_paged_source
+from flink_job_spark.sources.paged import (
+    PagedCursorReader,
+    PagedCursorStreamReader,
+    register_paged_source,
+)
+from flink_job_spark.streaming.ingest import stream_paged_ingest_audited
 
 
 def _read(spark, **opts):
@@ -72,3 +78,20 @@ def test_stream_reads_once_and_resumes_from_checkpoint(spark, tmp_path):
     run()  # same checkpoint: nothing new to admit
     again = spark.read.parquet(out)
     assert again.count() == 501, "restart re-read already-committed pages"
+
+
+@pytest.mark.parametrize("reader", [PagedCursorReader, PagedCursorStreamReader])
+@pytest.mark.parametrize("fetch_size", [0, -1])
+def test_readers_reject_non_positive_fetch_size(reader, fetch_size):
+    # a page of 0 keys never advances: the stream runner would loop forever
+    with pytest.raises(ValueError, match="fetch_size"):
+        reader({"cutoff": "10", "fetch_size": str(fetch_size)})
+
+
+@pytest.mark.parametrize("fetch_size", [0, -1])
+def test_stream_entry_rejects_non_positive_fetch_size_before_the_query(
+        fetch_size, tmp_path):
+    # no session: the check must come before anything touches Spark
+    with pytest.raises(ValueError, match="fetch_size"):
+        stream_paged_ingest_audited(None, 10, str(tmp_path / "t"),
+                                    str(tmp_path / "c"), fetch_size=fetch_size)
