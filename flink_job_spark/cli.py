@@ -8,7 +8,6 @@
   --order-by col[,col2...]              per-table ordering/cutoff key override (mis:231-242)
   --src-system-code                     envelope stamp (mis:1115)
   --fail-on-consistency-error           mis:119-121
-  --batch-size                          tables per progress batch (mis:84, 117)
   --fetch-size                          JDBC cursor page size (mis:83, 116)
   --parallelism                         parallel key-range read partitions (mis:81, 115)
   --jdbc-user / --jdbc-pass             source credentials (mis:112-113)
@@ -19,7 +18,10 @@
 
 With a ``jdbc:`` source the flow is the reference's: metadata scan →
 primary-key detection → frozen MAX watermark → pushed-down snapshot read
-(mis:202-250), then the same envelope/write/audit pipeline.
+(mis:202-250), then the same envelope/write/audit pipeline. One ``MIN, MAX``
+statement freezes the cutoff and the key-range bounds. All tables go through
+one ``ingest_tables`` call: each table write is one Spark job, so the
+reference's tables-per-job bound (``--batch-size``, mis:189-198) has no use.
 
 Order-key fallback mirrors the reference (explicit → detected key → first
 column, mis:231-242); for parquet stand-ins "detected key" is the
@@ -34,8 +36,10 @@ from __future__ import annotations
 import argparse
 import sys
 
+from flink_job_spark.operators.envelope import DEFAULT_SRC_SYSTEM
 from flink_job_spark.pipeline import ConsistencyError, IngestConfig, ingest_tables
 from flink_job_spark.session import get_spark
+from flink_job_spark.sources.jdbc import DEFAULT_FETCH_SIZE
 from flink_job_spark.sources.tables import check_table_access, load_table
 
 
@@ -69,7 +73,6 @@ def _load_jdbc_table(spark, url, table, key_override, args, props):
         detect_primary_key,
         read_key_bounds,
         read_table_metadata,
-        read_watermark_value,
     )
 
     try:
@@ -85,15 +88,12 @@ def _load_jdbc_table(spark, url, table, key_override, args, props):
         key = (key_override
                or detect_primary_key(spark, url, table, props)
                or infos[0].name)  # explicit → PK → first column (mis:231-242)
+        # one MIN, MAX statement freezes the cutoff AND the partition bounds
+        b = read_key_bounds(spark, url, table, key, properties=props)
+        cutoff = None if b is None else b[1]
         bounds = None
-        if args.parallelism > 1:
-            # one MIN, MAX statement freezes the cutoff AND the partition bounds
-            b = read_key_bounds(spark, url, table, key, properties=props)
-            cutoff = None if b is None else b[1]
-            if b is not None and all(isinstance(x, (int, float)) for x in b):
-                bounds = b
-        else:
-            cutoff = read_watermark_value(spark, url, table, key, properties=props)
+        if b is not None and all(isinstance(x, (int, float)) for x in b):
+            bounds = b
         by_name = {c.name: c for c in infos}
         src = JdbcSnapshotSource(
             url, table, [c.name for c in infos], key, cutoff=cutoff,
@@ -119,10 +119,9 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--mode", choices=["append", "replace"], default="append")
     p.add_argument("--order-by", default=None,
                    help="comma list parallel to --tables; blank entries auto-detect")
-    p.add_argument("--src-system-code", default="mis")
+    p.add_argument("--src-system-code", default=DEFAULT_SRC_SYSTEM)
     p.add_argument("--fail-on-consistency-error", action="store_true")
-    p.add_argument("--batch-size", type=int, default=5)       # mis:84, 117
-    p.add_argument("--fetch-size", type=int, default=50_000)  # mis:83, 116
+    p.add_argument("--fetch-size", type=int, default=DEFAULT_FETCH_SIZE)  # mis:116
     p.add_argument("--parallelism", type=int, default=2)      # mis:81, 115
     p.add_argument("--jdbc-user", default=None)               # mis:112
     p.add_argument("--jdbc-pass", default=None)               # mis:113
@@ -181,36 +180,35 @@ def main(argv: list[str] | None = None) -> int:
             key = override or detect_order_key(df.columns)
             jobs.append((df, src, f"{args.target_dir}/{dst}", key, None))
 
-    failures = 0
     if not jobs:
         # every requested table was skipped: exit non-zero so schedulers see
         # a zero-rows-ingested run as a failure, not a green no-op
         print("FAIL  no tables ingestable (all skipped)", file=sys.stderr)
         return 1
-    for start in range(0, len(jobs), args.batch_size):  # batch loop (mis:189-198)
-        try:
-            results = ingest_tables(spark, jobs[start:start + args.batch_size], cfg)
-        except ConsistencyError as e:
-            # --fail-on-consistency-error aborts the whole job, like the
-            # reference's rethrown ConsistencyCheckException (mis:365-368)
-            rep = e.report
-            print(f"ABORT {e.table}: consistency check failed "
-                  f"read={rep.source_count} written={rep.target_count} "
-                  f"delta={rep.delta} hash_mismatches={rep.hash_mismatches}",
-                  file=sys.stderr)
-            return 2
-        for r in results:
-            if r.error:
+    try:
+        results = ingest_tables(spark, jobs, cfg)
+    except ConsistencyError as e:
+        # --fail-on-consistency-error aborts the whole job, like the
+        # reference's rethrown ConsistencyCheckException (mis:365-368)
+        rep = e.report
+        print(f"ABORT {e.table}: consistency check failed "
+              f"read={rep.source_count} written={rep.target_count} "
+              f"delta={rep.delta} hash_mismatches={rep.hash_mismatches}",
+              file=sys.stderr)
+        return 2
+    failures = 0
+    for r in results:
+        if r.error:
+            failures += 1
+            print(f"FAIL  {r.table}: {r.error}", file=sys.stderr)
+        else:
+            rep = r.report
+            status = "OK" if rep.ok else "INCONSISTENT"
+            print(f"{status:5s} {r.table}: read={rep.source_count} "
+                  f"written={rep.target_count} delta={rep.delta} "
+                  f"hash_mismatches={rep.hash_mismatches} cutoff={r.cutoff}")
+            if not rep.ok:
                 failures += 1
-                print(f"FAIL  {r.table}: {r.error}", file=sys.stderr)
-            else:
-                rep = r.report
-                status = "OK" if rep.ok else "INCONSISTENT"
-                print(f"{status:5s} {r.table}: read={rep.source_count} "
-                      f"written={rep.target_count} delta={rep.delta} "
-                      f"hash_mismatches={rep.hash_mismatches} cutoff={r.cutoff}")
-                if not rep.ok:
-                    failures += 1
     return 1 if failures else 0
 
 

@@ -7,14 +7,17 @@ Per table:
 2. snapshot scan: explicit columns, cutoff predicate  (mis:1076-1088)
 3. stamp the 11-tech-column envelope; row_hash via the Column-expression
    implementation                                     (mis:1107-1119)
-4. write parquet partitioned by month(load_dttm), zstd — the local stand-in
-   for the Iceberg DDL (month partitioning mis:905, zstd mis:907, 512 MB
-   target files mis:908); computing row_hash_iceberg DURING the write via the
-   independent SQL-string implementation              (mis:918-939)
+4. write parquet partitioned by month(load_dttm) — the local stand-in for
+   the Iceberg DDL (month partitioning mis:905, 512 MB target files mis:908),
+   with the codec read from the Iceberg table properties (zstd, mis:907);
+   computing row_hash_iceberg DURING the write via the independent
+   SQL-string implementation                           (mis:918-939)
 5. re-read the target and run the COUNT+mismatch audit (mis:1385-1411)
 
 Failure isolation: per-table try/except, like the reference's skip-on-failure
-loop (mis:207-224, 309-359).
+loop (mis:207-224, 309-359). An append whose columns differ from the existing
+target fails its table before any write (SchemaDriftError); a new schema takes
+``replace``, the reference's drop/replace (mis:261-263).
 """
 
 from __future__ import annotations
@@ -30,16 +33,17 @@ from pyspark.sql import functions as F
 from flink_job_spark.operators.audit import AuditReport, run_consistency_check
 from flink_job_spark.operators.envelope import DEFAULT_SRC_SYSTEM, stamp, with_load_month
 from flink_job_spark.operators.snapshot import cutoff_predicate, freeze_cut, snapshot_scan
+from flink_job_spark.sinks.iceberg import TABLE_PROPERTIES, iceberg_write
 from flink_job_spark.types import ColumnInfo, infos_from_schema, quote_identifier
 
 log = logging.getLogger(__name__)
 
 
 class SchemaDriftError(RuntimeError):
-    """Raised when an append-mode snapshot's schema no longer matches the
-    existing target and the config says drift is an error. The reference
-    sidesteps drift by drop/replace (mis:261-263); production targets need an
-    explicit decision — fail loudly or evolve additively."""
+    """Raised when an append-mode snapshot's columns no longer match the
+    existing target, before anything is written. The reference sidesteps
+    drift by drop/replace (mis:261-263); ``replace`` mode is the way to a new
+    schema here too."""
 
     def __init__(self, table: str, added: set[str], removed: set[str]):
         super().__init__(
@@ -83,7 +87,6 @@ class IngestConfig:
     mode: str = "append"                 # append | replace (mis:114, 261-263)
     src_system_code: str = DEFAULT_SRC_SYSTEM
     fail_on_consistency_error: bool = False  # mis:119-121
-    compression: str = "zstd"            # mis:907
     load_dttm: dt.datetime | None = None  # fixed for deterministic tests
     infos: dict[str, ColumnInfo] = field(default_factory=dict)
     # Iceberg writer branch (mis:886-939): when catalog is set, the target is
@@ -93,15 +96,6 @@ class IngestConfig:
     database: str = "default"
     # per-task progress logging + exact observed write counts (mis:1120-1131)
     progress: bool = False
-    # cluster output files by the order key (sortWithinPartitions): parquet
-    # row-group min/max stats then prune cutoff/point-lookup scans on the key
-    # — the file-layout dividend of the reference's ordered cursor, without a
-    # global sort's extra shuffle
-    cluster_by_key: bool = False
-    # append-mode schema drift policy: 'fail' aborts the table (per-table
-    # isolation), 'evolve' appends additively and reads the target with
-    # schema merge (Iceberg's add-column evolution, spelled for parquet)
-    on_schema_drift: str = "fail"
 
 
 def _detect_schema_drift(spark, target_path, new_schema):
@@ -156,7 +150,6 @@ def snapshot_ingest(
             if cfg.catalog:
                 # Iceberg branch: DDL (month hidden partitioning, zstd, 512 MB,
                 # v2, retention — mis:886-913) + writeTo append/overwrite
-                from flink_job_spark.sinks.iceberg import iceberg_write
                 derived = {i.name: i for i in infos_from_schema(scan.schema)}
                 cols = [cfg.infos.get(c) or derived[c] for c in scan.columns]
                 iceberg_write(spark, hashed, cfg.catalog, cfg.database, table,
@@ -166,26 +159,20 @@ def snapshot_ingest(
                     f"{quote_identifier(cfg.database)}.{quote_identifier(table)}")
             else:
                 to_write = with_load_month(hashed, names)
-                if cfg.cluster_by_key:
-                    to_write = to_write.sortWithinPartitions(order_col)
                 drift = _detect_schema_drift(spark, target_path, to_write.schema) \
                     if cfg.mode == "append" else None
-                if drift and cfg.on_schema_drift == "fail":
+                if drift:
                     raise SchemaDriftError(table, *drift)
                 (to_write.write
                     .partitionBy("load_month")
-                    .option("compression", cfg.compression)
+                    # one codec for both writers: the Iceberg DDL's (mis:907)
+                    .option("compression",
+                            TABLE_PROPERTIES["write.parquet.compression-codec"])
                     .mode("overwrite" if cfg.mode == "replace" else "append")
                     .parquet(target_path))
-                if drift:  # evolve: the target now holds two schemas — merge
-                    log.warning("schema drift on %s evolved additively: "
-                                "added=%s removed=%s", table, *drift)
-                    target = (spark.read.option("mergeSchema", "true")
-                              .parquet(target_path))
-                else:
-                    # explicit schema: an empty snapshot writes no data files
-                    # to infer from
-                    target = spark.read.schema(to_write.schema).parquet(target_path)
+                # explicit schema: an empty snapshot writes no data files to
+                # infer from
+                target = spark.read.schema(to_write.schema).parquet(target_path)
         if obs is not None:
             log.info("Total emitted in this run: %s from %s (mis:1132-1134)",
                      obs.get.get("rows_written"), table)

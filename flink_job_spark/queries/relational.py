@@ -539,9 +539,9 @@ def _morton_terms(x: str, y: str) -> str:
 def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-only bit arithmetic (20 shift/mask terms, one codegen projection).
     At 100 TB the layout job is: compute zkey, repartitionByRange(zkey), and
-    sortWithinPartitions before the write (sinks cluster_by_key does exactly
-    that) — then min/max file stats prune on BOTH custkey and date predicates
-    instead of only the leading sort column."""
+    sortWithinPartitions before the write — then min/max file stats prune on
+    BOTH custkey and date predicates instead of only the leading sort
+    column."""
     o = load_table(spark, sf_dir, "orders")
     mask = (1 << ZORDER_BITS) - 1
     zx = F.col("o_custkey").bitwiseAND(mask)

@@ -16,6 +16,7 @@ configs (pure, unit-testable); `.load()` happens at the call site.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from decimal import Decimal
 from typing import Any
 
 from pyspark.sql import DataFrameReader, SparkSession
@@ -31,7 +32,7 @@ def quote_source_identifier(name: str, quote: str = '"') -> str:
     return quote + name.replace(quote, quote * 2) + quote
 
 
-def render_sql_literal(value: Any, type_hint: str = "") -> str:
+def render_sql_literal(value: Any) -> str:
     """Dialect-correct literal rendering for generated predicates (mis:659-689):
     numbers bare, DATE/TIME/TIMESTAMP prefixed literals, strings quoted+escaped."""
     import datetime as dt
@@ -42,6 +43,8 @@ def render_sql_literal(value: Any, type_hint: str = "") -> str:
         return "TRUE" if value else "FALSE"
     if isinstance(value, (int, float)):
         return repr(value)
+    if isinstance(value, Decimal):  # NUMERIC/DECIMAL keys; plain, never 1E+1
+        return format(value, "f")
     if isinstance(value, dt.datetime):
         # millisecond precision like the reference (mis:676-680)
         return "TIMESTAMP '" + value.strftime("%Y-%m-%d %H:%M:%S.") + f"{value.microsecond // 1000:03d}'"

@@ -34,8 +34,9 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from flink_job_spark.sources.jdbc import DEFAULT_FETCH_SIZE
+
 SCHEMA_DDL = "id BIGINT, payload STRING, bucket INT"
-DEFAULT_FETCH_SIZE = 50_000  # the reference's mis default (mis:83)
 
 
 def _row(key: int):

@@ -124,7 +124,7 @@ def stream_paged_ingest_audited(
     target_dir: str,
     checkpoint_dir: str,
     fetch_size: int = DEFAULT_FETCH_SIZE,
-    src_system_code: str = "mis",
+    src_system_code: str = DEFAULT_SRC_SYSTEM,
     load_dttm: dt.datetime | None = None,
     fail_on_consistency_error: bool = True,
     row_hash=None,

@@ -1,21 +1,23 @@
-"""With a parallel JDBC read the CLI freezes the snapshot cutoff and the
+"""Whatever --parallelism is, the CLI freezes the snapshot cutoff and the
 partition bounds from one MIN, MAX statement; it never issues a second
-MAX-only watermark query."""
+MAX-only watermark query. A NUMERIC key's cutoff renders as a bare number."""
 
 from __future__ import annotations
 
 import argparse
+from decimal import Decimal
 
 import pytest
 
 from flink_job_spark import cli
 from flink_job_spark.sources import metadata
+from flink_job_spark.sources.jdbc import render_sql_literal
 
 
-def _derby_table(spark, url: str, n: int) -> None:
+def _derby_table(spark, url: str, n: int, key_type: str) -> None:
     conn = spark.sparkContext._jvm.java.sql.DriverManager.getConnection(url)
     st = conn.createStatement()
-    st.executeUpdate('CREATE TABLE "probe_t" ("pk" BIGINT NOT NULL, '
+    st.executeUpdate(f'CREATE TABLE "probe_t" ("pk" {key_type} NOT NULL, '
                      '"v" VARCHAR(10), PRIMARY KEY ("pk"))')
     for i in range(1, n + 1):
         st.executeUpdate(f"""INSERT INTO "probe_t" VALUES ({i}, 'v{i}')""")
@@ -23,18 +25,30 @@ def _derby_table(spark, url: str, n: int) -> None:
     conn.close()
 
 
-@pytest.mark.parametrize("n_rows", [0, 40])
-def test_parallel_jdbc_load_takes_cutoff_from_bounds(spark, tmp_path, monkeypatch, n_rows):
-    url = f"jdbc:derby:memory:fjs_probe_{n_rows};create=true"
-    _derby_table(spark, url, n_rows)
+@pytest.mark.parametrize("parallelism, key_type, n_rows", [
+    pytest.param(2, "BIGINT", 0, id="0"),
+    pytest.param(2, "BIGINT", 40, id="40"),
+    pytest.param(1, "BIGINT", 0, id="p1-bigint-0"),
+    pytest.param(1, "BIGINT", 40, id="p1-bigint-40"),
+    pytest.param(1, "NUMERIC(18,0)", 40, id="p1-numeric-40"),
+    pytest.param(2, "NUMERIC(18,0)", 40, id="p2-numeric-40"),
+])
+def test_parallel_jdbc_load_takes_cutoff_from_bounds(spark, tmp_path, monkeypatch,
+                                                     parallelism, key_type, n_rows):
+    url = f"jdbc:derby:memory:fjs_probe_{parallelism}_{key_type[:3]}_{n_rows};create=true"
+    _derby_table(spark, url, n_rows, key_type)
 
     def no_second_max(*args, **kwargs):
         raise AssertionError("separate MAX watermark query issued")
 
     monkeypatch.setattr(metadata, "read_watermark_value", no_second_max)
-    args = argparse.Namespace(parallelism=2, fetch_size=10)
+    args = argparse.Namespace(parallelism=parallelism, fetch_size=10)
     loaded = cli._load_jdbc_table(spark, url, "probe_t", None, args, {})
     assert loaded is not None
     df, key, _ = loaded
     assert key == "pk"
     assert df.count() == n_rows
+
+
+def test_decimal_literal_renders_bare_in_plain_notation():
+    assert render_sql_literal(Decimal("1E+1")) == "10"
