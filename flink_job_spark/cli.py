@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import argparse
 import sys
+from decimal import Decimal
 
 from flink_job_spark.operators.envelope import DEFAULT_SRC_SYSTEM
 from flink_job_spark.pipeline import ConsistencyError, IngestConfig, ingest_tables
@@ -92,8 +93,12 @@ def _load_jdbc_table(spark, url, table, key_override, args, props):
         b = read_key_bounds(spark, url, table, key, properties=props)
         cutoff = None if b is None else b[1]
         bounds = None
-        if b is not None and all(isinstance(x, (int, float)) for x in b):
-            bounds = b
+        # Spark parses lowerBound/upperBound as longs (a DOUBLE key's "1.5"
+        # fails the read), and py4j hands a NUMERIC key's bounds over as
+        # Decimal. The first and last stride partitions are open-ended, so
+        # whole-number bounds lose no row.
+        if b is not None and all(isinstance(x, (int, float, Decimal)) for x in b):
+            bounds = tuple(int(x) for x in b)
         by_name = {c.name: c for c in infos}
         src = JdbcSnapshotSource(
             url, table, [c.name for c in infos], key, cutoff=cutoff,

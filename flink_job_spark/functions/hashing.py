@@ -23,6 +23,10 @@ Token rules (all three implementations; citations to mis):
 - DATE → ISO string                                       (1661-1666)
 - CHAR(n) → right-pad with spaces to precision n          (1668-1673, 1846-1855)
 - BINARY → lowercase hex                                  (1675-1683)
+  (the Spark builders map ``hex``'s ``A-F`` with ``translate``, not
+  ``lower()``: ``hex`` emits only ``0-9A-F``, so the token is the same,
+  and the first ``lower()`` in a JVM pays a one-off ICU table build of
+  about 3.4 CPU-s; the DuckDB oracle keeps ``lower(hex(x))``)
 - everything else → toString                              (1685-1687)
 - every token truncated to 1000 chars                     (1690-1692, 1861)
 - tokens joined with ``'|'``, MD5, lowercase hex          (1598-1613, 1806-1810)
@@ -69,7 +73,7 @@ def hash_token_column(col: Column, dtype: T.DataType, info: ColumnInfo | None = 
     elif isinstance(dtype, T.DateType):
         tok = col.cast("string")
     elif isinstance(dtype, T.BinaryType):
-        tok = F.lower(F.hex(col))
+        tok = F.translate(F.hex(col), "ABCDEF", "abcdef")
     elif isinstance(dtype, T.StringType) and is_time:
         # TIME stand-in: truncate to 'HH:mm:ss', then always '.0000' — the
         # reference's canonicalizers discard any fraction (mis:1646-1651)
@@ -110,7 +114,7 @@ def hash_token_sql(name: str, dtype: T.DataType, info: ColumnInfo | None = None)
     elif isinstance(dtype, T.DateType):
         tok = f"CAST({q} AS STRING)"
     elif isinstance(dtype, T.BinaryType):
-        tok = f"LOWER(HEX({q}))"
+        tok = f"TRANSLATE(HEX({q}), 'ABCDEF', 'abcdef')"
     elif isinstance(dtype, T.StringType) and is_time:
         tok = f"CONCAT(SUBSTRING({q}, 1, 8), '.0000')"
     elif isinstance(dtype, T.StringType) and is_char:

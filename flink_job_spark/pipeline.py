@@ -15,9 +15,9 @@ Per table:
 5. re-read the target and run the COUNT+mismatch audit (mis:1385-1411)
 
 Failure isolation: per-table try/except, like the reference's skip-on-failure
-loop (mis:207-224, 309-359). An append whose columns differ from the existing
-target fails its table before any write (SchemaDriftError); a new schema takes
-``replace``, the reference's drop/replace (mis:261-263).
+loop (mis:207-224, 309-359). An append whose columns or column types differ
+from the existing target fails its table before any write (SchemaDriftError);
+a new schema takes ``replace``, the reference's drop/replace (mis:261-263).
 """
 
 from __future__ import annotations
@@ -40,17 +40,22 @@ log = logging.getLogger(__name__)
 
 
 class SchemaDriftError(RuntimeError):
-    """Raised when an append-mode snapshot's columns no longer match the
-    existing target, before anything is written. The reference sidesteps
-    drift by drop/replace (mis:261-263); ``replace`` mode is the way to a new
-    schema here too."""
+    """Raised when an append-mode snapshot's columns or column types no longer
+    match the existing target, before anything is written. The reference
+    sidesteps drift by drop/replace (mis:261-263); ``replace`` mode is the way
+    to a new schema here too. ``changed`` maps a column to its (target, new)
+    type strings."""
 
-    def __init__(self, table: str, added: set[str], removed: set[str]):
+    def __init__(self, table: str, added: set[str], removed: set[str],
+                 changed: dict[str, tuple[str, str]]):
+        retyped = [f"{c}: {old} -> {new}" for c, (old, new) in sorted(changed.items())]
         super().__init__(
-            f"schema drift for {table}: added={sorted(added)} removed={sorted(removed)}")
+            f"schema drift for {table}: added={sorted(added)} removed={sorted(removed)} "
+            f"changed={retyped}")
         self.table = table
         self.added = added
         self.removed = removed
+        self.changed = changed
 
 
 class ConsistencyError(RuntimeError):
@@ -99,21 +104,27 @@ class IngestConfig:
 
 
 def _detect_schema_drift(spark, target_path, new_schema):
-    """(added, removed) column-name sets vs the existing target, or None when
-    the target doesn't exist yet / schemas agree. Reads footers only."""
+    """(added, removed, changed) vs the existing target, or None when the
+    target doesn't exist yet / schemas agree. ``changed`` maps each common
+    column whose type differs to its (target, new) ``simpleString``, so
+    nullability is ignored: a retyped column would land files that no later
+    read of the target can decode. Reads footers only."""
     from pyspark.errors import AnalysisException
 
     try:
-        existing = set(spark.read.parquet(target_path).schema.names)
+        existing = {f.name: f.dataType.simpleString()
+                    for f in spark.read.parquet(target_path).schema.fields}
     except AnalysisException:  # first load: no target yet (PATH_NOT_FOUND)
         return None
     # any OTHER failure (transient storage/permission error) must propagate:
     # treating it as "no target" would silently skip drift detection and
     # append a drifted schema
-    new = set(new_schema.names)
+    new = {f.name: f.dataType.simpleString() for f in new_schema.fields}
     if existing == new:
         return None
-    return new - existing, existing - new
+    changed = {c: (existing[c], t) for c, t in new.items()
+               if c in existing and existing[c] != t}
+    return new.keys() - existing.keys(), existing.keys() - new.keys(), changed
 
 
 def snapshot_ingest(

@@ -15,6 +15,8 @@ from pyspark.sql import types as T
 
 from flink_job_spark.functions.hashing import (
     duckdb_row_hash_sql,
+    hash_token_column,
+    hash_token_sql,
     row_hash_column,
     row_hash_sql_expr,
 )
@@ -125,3 +127,15 @@ def test_token_edge_semantics(spark, fixture_df):
 
     # all-NULL row stays stable and uses sentinel (not empty string)
     assert h[3] is not None
+
+
+def test_binary_token_is_lowercase_hex_of_every_byte(spark):
+    """Both Spark builders lowercase ``hex``'s A-F with ``translate``, not
+    ``lower()``: every byte value must still give Python's lowercase hex."""
+    data = bytes(range(256))
+    df = spark.createDataFrame([(data,)], "b BINARY")
+    row = df.select(
+        hash_token_column(F.col("b"), T.BinaryType()).alias("col"),
+        F.expr(hash_token_sql("b", T.BinaryType())).alias("sql"),
+    ).first()
+    assert row["col"] == row["sql"] == data.hex()

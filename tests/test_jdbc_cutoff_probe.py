@@ -1,6 +1,8 @@
 """Whatever --parallelism is, the CLI freezes the snapshot cutoff and the
 partition bounds from one MIN, MAX statement; it never issues a second
-MAX-only watermark query. A NUMERIC key's cutoff renders as a bare number."""
+MAX-only watermark query. A NUMERIC key's cutoff renders as a bare number,
+and NUMERIC and DOUBLE bounds split the read into ``--parallelism``
+partitions."""
 
 from __future__ import annotations
 
@@ -32,6 +34,7 @@ def _derby_table(spark, url: str, n: int, key_type: str) -> None:
     pytest.param(1, "BIGINT", 40, id="p1-bigint-40"),
     pytest.param(1, "NUMERIC(18,0)", 40, id="p1-numeric-40"),
     pytest.param(2, "NUMERIC(18,0)", 40, id="p2-numeric-40"),
+    pytest.param(2, "DOUBLE", 40, id="p2-double-40"),
 ])
 def test_parallel_jdbc_load_takes_cutoff_from_bounds(spark, tmp_path, monkeypatch,
                                                      parallelism, key_type, n_rows):
@@ -48,6 +51,8 @@ def test_parallel_jdbc_load_takes_cutoff_from_bounds(spark, tmp_path, monkeypatc
     df, key, _ = loaded
     assert key == "pk"
     assert df.count() == n_rows
+    # NUMERIC (Decimal) and DOUBLE (float) bounds split the read like BIGINT's
+    assert df.rdd.getNumPartitions() == (parallelism if n_rows else 1)
 
 
 def test_decimal_literal_renders_bare_in_plain_notation():

@@ -135,6 +135,31 @@ def test_schema_drift_fails_before_write(spark, sf_dir, tmp_path):
     assert spark.read.parquet(path).count() == n0  # nothing was written
 
 
+def test_schema_drift_type_change_fails_before_write(spark, sf_dir, tmp_path):
+    """An append that keeps the column names but changes a column's type is
+    drift too: its files would make every later read of the target fail
+    (PARQUET_COLUMN_DATA_TYPE_MISMATCH). Nullability alone is not drift."""
+    nat = load_table(spark, sf_dir, "nation")
+    path = str(tmp_path / "n")
+    cfg = IngestConfig(mode="append", load_dttm=dt.datetime(2026, 1, 1))
+    assert snapshot_ingest(spark, nat, "nation", path, "n_nationkey", cfg).ok
+    n0 = spark.read.parquet(path).count()
+
+    later = nat.withColumn("n_nationkey", F.col("n_nationkey") + 100)
+    retyped = later.withColumn("n_regionkey", F.col("n_regionkey").cast("string"))
+    res = snapshot_ingest(spark, retyped, "nation", path, "n_nationkey", cfg, floor=24)
+    assert res.error is not None and "schema drift" in res.error
+    assert "n_regionkey: int -> string" in res.error
+    assert spark.read.parquet(path).count() == n0  # nothing was written, still reads
+
+    # the same rows with their own types append cleanly, nullable or not
+    not_null = later.withColumn("n_regionkey", F.coalesce("n_regionkey", F.lit(0)))
+    assert not not_null.schema["n_regionkey"].nullable
+    assert snapshot_ingest(spark, not_null, "nation", path, "n_nationkey", cfg,
+                           floor=24).error is None
+    assert spark.read.parquet(path).count() == n0 + later.count()
+
+
 def test_snapshot_diff_operator(spark):
     """ADDED/REMOVED/CHANGED/unchanged on a hand-built pair of snapshots."""
     from flink_job_spark.operators.diff import snapshot_diff
