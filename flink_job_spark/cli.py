@@ -12,7 +12,9 @@
   --parallelism                         parallel key-range read partitions (mis:81, 115)
   --jdbc-user / --jdbc-pass             source credentials (mis:112-113)
   --catalog / --iceberg-db              Iceberg writer branch target (mis:111)
-  --progress                            per-task progress + observed row counts
+  --progress                            Spark's own per-task log line at INFO,
+                                        e.g. "Finished task 1.0 in stage 0.0
+                                        (TID 1) ... (2/4)" (mis:1120-1131)
   --source-format parquet|csv|json|orc  on-disk source format (engine extension;
                                         the reference reads JDBC only)
 
@@ -35,6 +37,7 @@ from __future__ import annotations
 
 import argparse
 import sys
+from contextlib import contextmanager
 from decimal import Decimal
 
 from flink_job_spark.operators.envelope import DEFAULT_SRC_SYSTEM
@@ -63,6 +66,26 @@ def detect_order_key(columns: list[str]) -> str:
         if c.lower().endswith("key"):
             return c
     return columns[0]
+
+
+@contextmanager
+def _task_progress_log(spark, enabled: bool):
+    """Raise Spark's ``TaskSetManager`` logger to INFO while the block runs,
+    then restore its level: one timestamped ``(k/n)`` line per finished task,
+    the reference's progress print (mis:1120-1131) in Spark's unit of work.
+    Ctrl-C needs nothing here: PySpark's SIGINT handler cancels all jobs."""
+    if not enabled:
+        yield
+        return
+    jvm = spark.sparkContext._jvm
+    name = "org.apache.spark.scheduler.TaskSetManager"
+    configurator = jvm.org.apache.logging.log4j.core.config.Configurator
+    previous = jvm.org.apache.logging.log4j.LogManager.getLogger(name).getLevel()
+    configurator.setLevel(name, jvm.org.apache.logging.log4j.Level.INFO)
+    try:
+        yield
+    finally:
+        configurator.setLevel(name, previous)
 
 
 def _load_jdbc_table(spark, url, table, key_override, args, props):
@@ -133,7 +156,8 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--catalog", default=None,
                    help="Iceberg catalog name: write via DDL+writeTo instead of parquet")
     p.add_argument("--iceberg-db", default="default")         # mis:111
-    p.add_argument("--progress", action="store_true")
+    p.add_argument("--progress", action="store_true",
+                   help="log each finished Spark task (TaskSetManager at INFO)")
     p.add_argument("--source-format", choices=["parquet", "csv", "json", "orc"],
                    default="parquet",
                    help="on-disk source format under --source-dir "
@@ -151,8 +175,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("flink_job_spark-cli")
     cfg = IngestConfig(mode=args.mode, src_system_code=args.src_system_code,
                        fail_on_consistency_error=args.fail_on_consistency_error,
-                       catalog=args.catalog, database=args.iceberg_db,
-                       progress=args.progress)
+                       catalog=args.catalog, database=args.iceberg_db)
 
     is_jdbc = args.source_dir.startswith("jdbc:")
     props = {}
@@ -191,7 +214,8 @@ def main(argv: list[str] | None = None) -> int:
         print("FAIL  no tables ingestable (all skipped)", file=sys.stderr)
         return 1
     try:
-        results = ingest_tables(spark, jobs, cfg)
+        with _task_progress_log(spark, args.progress):
+            results = ingest_tables(spark, jobs, cfg)
     except ConsistencyError as e:
         # --fail-on-consistency-error aborts the whole job, like the
         # reference's rethrown ConsistencyCheckException (mis:365-368)

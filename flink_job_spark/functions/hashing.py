@@ -6,12 +6,15 @@ write time → ``row_hash_iceberg``) and audits that they agree
 (FirebirdToIcebergJob.java: Java tokens mis:1615-1694, sink-SQL tokens
 mis:1820-1862, Firebird-SQL tokens fb:1612-1633).
 
-We preserve that dual-implementation design: :func:`row_hash_column` builds the
-hash as a PySpark Column expression tree, :func:`row_hash_sql_expr` builds it
-as a generated Spark-SQL string — two independently coded paths whose
-agreement the audit (and tests) verify. A third generator,
-:func:`duckdb_row_hash_sql`, emits the equivalent DuckDB SQL for the
-differential oracle harness.
+Here both Spark hashes come from one engine. :func:`row_hash_column` builds
+the hash as a PySpark Column expression tree and :func:`row_hash_sql_expr` as
+a generated Spark-SQL string. The two builders are coded separately, but
+Catalyst resolves them to one expression (``semanticEquals`` over every token
+rule), so a write computes one MD5 per row and stores it in both envelope
+columns. The audit's compare of that stored pair therefore fails only when a
+caller overrides ``row_hash``; ``tests/test_hashing.py`` is what checks that
+the builders agree. A third generator, :func:`duckdb_row_hash_sql`, emits the
+equivalent DuckDB SQL for the differential oracle harness.
 
 Token rules (all three implementations; citations to mis):
 - NULL → ``<NULL>`` sentinel, COALESCE outermost          (1616-1618, 1861)
@@ -97,8 +100,9 @@ def row_hash_column(df: DataFrame, cols: list[str] | None = None,
 
 # ---------------------------------------------------------------------------
 # Implementation 2: generated Spark-SQL string (the "sink-side" row_hash_iceberg)
-# Independently coded on purpose — mirrors the reference's buildHashExpression
-# SQL generator (mis:1802-1862). Use with F.expr(...).
+# Coded separately on purpose — mirrors the reference's buildHashExpression
+# SQL generator (mis:1802-1862); it analyzes to the same expression as
+# implementation 1. Use with F.expr(...).
 # ---------------------------------------------------------------------------
 
 def hash_token_sql(name: str, dtype: T.DataType, info: ColumnInfo | None = None) -> str:

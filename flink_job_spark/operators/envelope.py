@@ -81,8 +81,8 @@ def with_envelope(
         "extract_dttm": F.lit(None).cast("timestamp_ntz"),
         "src_chng_dttm": F.lit(None).cast("timestamp_ntz"),
         "row_hash": row_hash,
-        # null at source; filled sink-side by the independent SQL implementation
-        # during the write (mis:930-935, 1802-1811)
+        # null at source; filled sink-side by the SQL-string builder during
+        # the write (mis:930-935, 1802-1811)
         "row_hash_iceberg": F.lit(None).cast("string"),
     }
     projection = [F.col(c) for c in src_cols]
@@ -98,10 +98,13 @@ def stamp(
     row_hash: Column | None = None,
 ) -> tuple[DataFrame, dict[str, str]]:
     """The full stamp every ingest path writes: the envelope with
-    ``row_hash_iceberg`` filled by the independent SQL-string hash, evaluated
-    during the write — same engine, independent implementation
-    (mis:918-939). Returns the stamped frame and the collision-resolved
-    envelope names the audit must compare."""
+    ``row_hash_iceberg`` filled by the SQL-string hash builder during the
+    write (mis:918-939). The two builders are coded separately but Catalyst
+    resolves them to one expression, so both columns hold one MD5 per row
+    and the audit's compare of them fails only when ``row_hash`` is
+    overridden; ``tests/test_hashing.py`` checks the builders agree.
+    Returns the stamped frame and the collision-resolved envelope names the
+    audit must compare."""
     src_cols = list(df.columns)
     names = tech_column_names(src_cols)
     sink_hash = row_hash_sql_expr(df.schema, src_cols, infos)

@@ -3,16 +3,19 @@ reference's per-table flow (mis:202-297) + post-load audit (mis:1264-1331).
 
 Per table:
 1. freeze the cut: cutoff MAX(order_col) and the baseline source COUNT under
-   it from ONE aggregate pass (mis:628-643 + mis:1362-1383)
+   it from ONE aggregate pass (mis:628-643 + mis:1362-1383); a resume from a
+   key floor cuts, writes and audits only keys above the floor
 2. snapshot scan: explicit columns, cutoff predicate  (mis:1076-1088)
 3. stamp the 11-tech-column envelope; row_hash via the Column-expression
    implementation                                     (mis:1107-1119)
 4. write parquet partitioned by month(load_dttm) — the local stand-in for
    the Iceberg DDL (month partitioning mis:905, 512 MB target files mis:908),
    with the codec read from the Iceberg table properties (zstd, mis:907);
-   computing row_hash_iceberg DURING the write via the independent
-   SQL-string implementation                           (mis:918-939)
-5. re-read the target and run the COUNT+mismatch audit (mis:1385-1411)
+   computing row_hash_iceberg DURING the write via the SQL-string builder
+   (mis:918-939), which Catalyst resolves to the same expression as
+   row_hash, so the hash compare fails only on an overridden row_hash
+5. re-read the target and run the COUNT+mismatch audit over the range the
+   scan wrote (mis:1385-1411)
 
 Failure isolation: per-table try/except, like the reference's skip-on-failure
 loop (mis:207-224, 309-359). An append whose columns or column types differ
@@ -32,7 +35,7 @@ from pyspark.sql import functions as F
 
 from flink_job_spark.operators.audit import AuditReport, run_consistency_check
 from flink_job_spark.operators.envelope import DEFAULT_SRC_SYSTEM, stamp, with_load_month
-from flink_job_spark.operators.snapshot import cutoff_predicate, freeze_cut, snapshot_scan
+from flink_job_spark.operators.snapshot import freeze_cut, resume_predicate, snapshot_scan
 from flink_job_spark.sinks.iceberg import TABLE_PROPERTIES, iceberg_write
 from flink_job_spark.types import ColumnInfo, infos_from_schema, quote_identifier
 
@@ -89,6 +92,10 @@ class IngestResult:
 
 @dataclass
 class IngestConfig:
+    """What a caller sets for a snapshot. The landed row count comes back in
+    ``IngestResult.report.target_count``; task progress is Spark's own log
+    (the CLI's ``--progress``)."""
+
     mode: str = "append"                 # append | replace (mis:114, 261-263)
     src_system_code: str = DEFAULT_SRC_SYSTEM
     fail_on_consistency_error: bool = False  # mis:119-121
@@ -99,8 +106,6 @@ class IngestConfig:
     # Requires the Iceberg Spark runtime on the classpath.
     catalog: str | None = None
     database: str = "default"
-    # per-task progress logging + exact observed write counts (mis:1120-1131)
-    progress: bool = False
 
 
 def _detect_schema_drift(spark, target_path, new_schema):
@@ -138,57 +143,43 @@ def snapshot_ingest(
 ) -> IngestResult:
     cfg = config or IngestConfig()
     try:
-        cutoff, src_count = freeze_cut(source, order_col)
+        # a resume (floor) cuts, writes and audits the same range: (floor, cutoff]
+        cut_source = (source if floor is None
+                      else source.filter(F.col(order_col) > F.lit(floor)))
+        cutoff, src_count = freeze_cut(cut_source, order_col)
 
         scan = snapshot_scan(source, list(source.columns), order_col, cutoff,
                              floor=floor, ordered=False)
         hashed, names = stamp(scan, cfg.src_system_code, cfg.load_dttm, cfg.infos)
 
-        obs = None
-        if cfg.progress:
-            # observed metric rides the write plan: exact rows written with no
-            # second scan (the per-run total print of mis:1132-1134)
-            from pyspark.sql import Observation
-            obs = Observation(f"ingest:{table}")
-            hashed = hashed.observe(obs, F.count(F.lit(1)).alias("rows_written"))
-
-        from contextlib import nullcontext
-
-        from flink_job_spark.progress import ProgressReporter
-        reporter = (ProgressReporter(spark, f"ingest:{table}", f"snapshot {table}")
-                    if cfg.progress else nullcontext())
-        with reporter:
-            if cfg.catalog:
-                # Iceberg branch: DDL (month hidden partitioning, zstd, 512 MB,
-                # v2, retention — mis:886-913) + writeTo append/overwrite
-                derived = {i.name: i for i in infos_from_schema(scan.schema)}
-                cols = [cfg.infos.get(c) or derived[c] for c in scan.columns]
-                iceberg_write(spark, hashed, cfg.catalog, cfg.database, table,
-                              cols, cfg.mode)
-                target = spark.table(
-                    f"{quote_identifier(cfg.catalog)}."
-                    f"{quote_identifier(cfg.database)}.{quote_identifier(table)}")
-            else:
-                to_write = with_load_month(hashed, names)
-                drift = _detect_schema_drift(spark, target_path, to_write.schema) \
-                    if cfg.mode == "append" else None
-                if drift:
-                    raise SchemaDriftError(table, *drift)
-                (to_write.write
-                    .partitionBy("load_month")
-                    # one codec for both writers: the Iceberg DDL's (mis:907)
-                    .option("compression",
-                            TABLE_PROPERTIES["write.parquet.compression-codec"])
-                    .mode("overwrite" if cfg.mode == "replace" else "append")
-                    .parquet(target_path))
-                # explicit schema: an empty snapshot writes no data files to
-                # infer from
-                target = spark.read.schema(to_write.schema).parquet(target_path)
-        if obs is not None:
-            log.info("Total emitted in this run: %s from %s (mis:1132-1134)",
-                     obs.get.get("rows_written"), table)
+        if cfg.catalog:
+            # Iceberg branch: DDL (month hidden partitioning, zstd, 512 MB,
+            # v2, retention — mis:886-913) + writeTo append/overwrite
+            derived = {i.name: i for i in infos_from_schema(scan.schema)}
+            cols = [cfg.infos.get(c) or derived[c] for c in scan.columns]
+            iceberg_write(spark, hashed, cfg.catalog, cfg.database, table,
+                          cols, cfg.mode)
+            target = spark.table(
+                f"{quote_identifier(cfg.catalog)}."
+                f"{quote_identifier(cfg.database)}.{quote_identifier(table)}")
+        else:
+            to_write = with_load_month(hashed, names)
+            drift = _detect_schema_drift(spark, target_path, to_write.schema) \
+                if cfg.mode == "append" else None
+            if drift:
+                raise SchemaDriftError(table, *drift)
+            (to_write.write
+                .partitionBy("load_month")
+                # one codec for both writers: the Iceberg DDL's (mis:907)
+                .option("compression",
+                        TABLE_PROPERTIES["write.parquet.compression-codec"])
+                .mode("overwrite" if cfg.mode == "replace" else "append")
+                .parquet(target_path))
+            # explicit schema: an empty snapshot writes no data files to
+            # infer from
+            target = spark.read.schema(to_write.schema).parquet(target_path)
         report = run_consistency_check(
-            table, src_count, target, cutoff_predicate(order_col, cutoff),
+            table, src_count, target, resume_predicate(order_col, cutoff, floor),
             h1=names["row_hash"], h2=names["row_hash_iceberg"])
         if not report.ok:
             if cfg.fail_on_consistency_error:

@@ -47,14 +47,6 @@ TABLE_PROPERTIES: dict[str, str] = {
     "write.metadata.previous-versions-max": "20",            # mis:910
 }
 
-# tech-column DDL types in envelope order (mis:898-900); TIMESTAMP→NTZ per
-# the LocalDateTime semantics above, first slot NOT NULL (partition key)
-_TECH_DDL_TYPES = [
-    "TIMESTAMP_NTZ NOT NULL", "TIMESTAMP_NTZ", "BIGINT", "STRING", "BIGINT",
-    "BIGINT", "STRING", "TIMESTAMP_NTZ", "TIMESTAMP_NTZ", "STRING", "STRING",
-]
-
-
 @dataclass
 class IcebergCatalogConfig:
     """REST-catalog-over-S3 parameters (the knobs of mis:167-182)."""
@@ -125,9 +117,12 @@ def build_iceberg_ddl(
     tech = tech_column_names(src_names)
 
     parts = [f"{quote_identifier(c.name)} {column_ddl_type(c)}" for c in columns]
+    # tech-column types from the envelope (mis:898-900); load_dttm, the
+    # partition key, is NOT NULL
     parts += [
-        f"{quote_identifier(tech[slot])} {ddl}"
-        for (slot, _), ddl in zip(TECH_COLUMNS, _TECH_DDL_TYPES)
+        f"{quote_identifier(tech[slot])} {ddl.upper()}"
+        + (" NOT NULL" if slot == "load_dttm" else "")
+        for slot, ddl in TECH_COLUMNS
     ]
     target = (f"{quote_identifier(catalog)}.{quote_identifier(database)}"
               f".{quote_identifier(table)}")

@@ -16,6 +16,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_job_spark.sinks.iceberg import TABLE_PROPERTIES
+
 
 def with_file_cap(reader, max_files_per_trigger: int | None):
     """Apply maxFilesPerTrigger only when a cap is given: None means 'no
@@ -44,10 +46,12 @@ def write_epoch(df: DataFrame, batch_id: int, out_dir: str,
                 *partition_cols: str) -> None:
     """Write one epoch under ``out_dir/batch_id=N[/...]`` with dynamic
     partition overwrite: a REPLAYED epoch (crash before its offsets commit)
-    overwrites its own partition instead of appending a duplicate copy."""
+    overwrites its own partition instead of appending a duplicate copy.
+    The codec is the table snapshots' (the Iceberg DDL's zstd, mis:907)."""
     (df.withColumn("batch_id", F.lit(batch_id))
         .write
         .partitionBy("batch_id", *partition_cols)
         .option("partitionOverwriteMode", "dynamic")
+        .option("compression", TABLE_PROPERTIES["write.parquet.compression-codec"])
         .mode("overwrite")
         .parquet(out_dir))

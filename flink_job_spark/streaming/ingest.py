@@ -66,9 +66,11 @@ def stream_ingest(
     silently advances the stream (the reference's rethrow semantics,
     mis:365-368, made exactly-once).
 
-    ``row_hash`` overrides the source-side hash column (the audit exists
-    precisely because the two hash implementations are independent inputs).
-    Returns the per-batch :class:`AuditReport` ledger."""
+    ``row_hash`` overrides the source-side hash column. Without it both
+    stored hashes are one expression (see
+    :func:`~flink_job_spark.operators.envelope.stamp`), so the hash half of
+    the audit fails only on an override. Returns the per-batch
+    :class:`AuditReport` ledger."""
     stamped, names = stamp(stream_df, src_system_code, load_dttm, None, row_hash)
     reports: list[AuditReport] = []
     drain(with_load_month(stamped, names),

@@ -90,17 +90,6 @@ def jdbc_to_spark_type(jdbc_type: int, precision: int = 0, scale: int = 0) -> T.
     return T.StringType()
 
 
-def filter_lob_columns(cols: list[ColumnInfo]) -> list[ColumnInfo]:
-    """Drop BLOB columns like the reference's metadata scan does (mis:552-555)."""
-    kept = []
-    for c in cols:
-        if c.jdbc_type == JDBC["BLOB"]:
-            log.warning("skipping BLOB column %s (mis:552-555)", c.name)
-            continue
-        kept.append(c)
-    return kept
-
-
 def to_struct_type(cols: list[ColumnInfo]) -> T.StructType:
     return T.StructType([T.StructField(c.name, c.spark_type, c.nullable) for c in cols])
 

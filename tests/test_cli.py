@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_job_spark.cli import detect_order_key, main, parse_table_mappings
@@ -64,6 +65,45 @@ def test_cli_jdbc_source_end_to_end(spark, sf_dir, tmp_path):
     assert set(out.columns) >= {"ik", "name", "row_hash", "row_hash_iceberg"}
     # decimal/char canonicalization metadata flowed from the live scan
     assert out.select("ik").distinct().count() == 100
+
+
+@pytest.mark.parametrize("progress", [True, False])
+def test_cli_progress_raises_task_log_for_the_run(spark, sf_dir, tmp_path, capsys,
+                                                  monkeypatch, progress):
+    """--progress puts Spark's TaskSetManager logger at INFO (one "Finished
+    task ... (k/n)" line per task) while the tables ingest and restores the
+    level it found; without the flag the level is left alone. The landed
+    count is still printed."""
+    from flink_job_spark import cli
+
+    jvm = spark.sparkContext._jvm
+    name = "org.apache.spark.scheduler.TaskSetManager"
+    configurator = jvm.org.apache.logging.log4j.core.config.Configurator
+    level = jvm.org.apache.logging.log4j.Level
+    original = jvm.org.apache.logging.log4j.LogManager.getLogger(name).getLevel()
+
+    def current():
+        return jvm.org.apache.logging.log4j.LogManager.getLogger(name).getLevel().name()
+
+    seen = []
+    real_ingest_tables = cli.ingest_tables
+
+    def spy(*args, **kwargs):
+        seen.append(current())
+        return real_ingest_tables(*args, **kwargs)
+
+    monkeypatch.setattr(cli, "ingest_tables", spy)
+    # a level the CLI would not pick itself, so the restore is observable
+    configurator.setLevel(name, level.ERROR)
+    try:
+        argv = ["--tables", "nation", "--source-dir", sf_dir,
+                "--target-dir", str(tmp_path / "out"), "--mode", "replace"]
+        assert main(argv + ["--progress"] if progress else argv) == 0
+        assert seen == ["INFO" if progress else "ERROR"]
+        assert current() == "ERROR"
+    finally:
+        configurator.setLevel(name, original)
+    assert "OK    nation: read=25 written=25 " in capsys.readouterr().out
 
 
 def test_cli_fail_on_consistency_error_aborts(spark, sf_dir, tmp_path, capsys):
@@ -150,6 +190,5 @@ def test_probe_dim_skips_null_vectors_and_raises_on_empty(spark):
     df = spark.createDataFrame([(None,), ([1.0, 2.0, 3.0],)],
                                "v array<double>")
     assert probe_dim(df, "v") == 3
-    import pytest
     with pytest.raises(ValueError, match="no non-null"):
         probe_dim(df.filter(F.col("v").isNull()), "v")

@@ -60,7 +60,10 @@ def fixture_df(spark):
 
 
 def test_column_and_sql_impls_agree(spark, fixture_df):
-    """The dual-implementation invariant (mis:1264-1331) on edge values."""
+    """The dual-implementation invariant (mis:1264-1331) on edge values. The
+    two builders are coded separately but analyze to one expression, so the
+    stored hash pair of an ingest cannot disagree unless a caller overrides
+    ``row_hash``; this test is what checks the builders agree."""
     df = fixture_df.select(
         "c_int",
         row_hash_column(fixture_df, infos=INFOS).alias("h1"),
@@ -70,6 +73,10 @@ def test_column_and_sql_impls_agree(spark, fixture_df):
     assert len(rows) == 3
     for r in rows:
         assert r["h1"] == r["h2"], f"row {r['c_int']}: {r['h1']} != {r['h2']}"
+
+    projection = df._jdf.queryExecution().analyzed().projectList()
+    h1, h2 = projection.apply(1).child(), projection.apply(2).child()
+    assert h1.semanticEquals(h2)
 
 
 def test_duckdb_impl_agrees(spark, fixture_df, tmp_path):

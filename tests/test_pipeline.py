@@ -105,6 +105,8 @@ def test_resume_floor_equivalence(spark, sf_dir, tmp_path):
     # resume from floor
     res = snapshot_ingest(spark, li, "part2", path, "l_orderkey", cfg, floor=1000)
     assert res.error is None
+    # the audit covers (floor, cutoff], the range the resume wrote
+    assert res.ok, res.report
     target = spark.read.parquet(path)
     cutoff = res.cutoff
     assert target.filter(cutoff_predicate("l_orderkey", cutoff)).count() == li.count()
@@ -155,8 +157,10 @@ def test_schema_drift_type_change_fails_before_write(spark, sf_dir, tmp_path):
     # the same rows with their own types append cleanly, nullable or not
     not_null = later.withColumn("n_regionkey", F.coalesce("n_regionkey", F.lit(0)))
     assert not not_null.schema["n_regionkey"].nullable
-    assert snapshot_ingest(spark, not_null, "nation", path, "n_nationkey", cfg,
-                           floor=24).error is None
+    res = snapshot_ingest(spark, not_null, "nation", path, "n_nationkey", cfg, floor=24)
+    assert res.error is None
+    # baseline and audit both cover (24, 124]: earlier loads are not counted
+    assert res.ok, res.report
     assert spark.read.parquet(path).count() == n0 + later.count()
 
 

@@ -855,6 +855,13 @@ def test_stream_paged_audited_e2e_resume(spark, tmp_path):
     assert (agg["n"], agg["d"], agg["lo"], agg["hi"]) == (1001, 1001, 0, 1000)
     assert t.filter(F.lower("row_hash") != F.lower("row_hash_iceberg")).count() == 0
 
+    # epochs land with the table snapshots' codec (the Iceberg DDL's zstd)
+    import pyarrow.parquet as pq
+    epoch_file = next((tmp_path / "tgt").glob("batch_id=*/load_month=*/*.parquet"))
+    footer = pq.ParquetFile(epoch_file).metadata
+    assert {footer.row_group(0).column(i).compression
+            for i in range(footer.num_columns)} == {"ZSTD"}
+
 
 def test_stream_paged_audited_corruption_blocks_then_recovers(spark, tmp_path):
     """Injected dual-hash corruption on the paged pipeline fails the query

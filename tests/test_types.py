@@ -8,7 +8,6 @@ from pyspark.sql import types as T
 from flink_job_spark.types import (
     JDBC,
     ColumnInfo,
-    filter_lob_columns,
     jdbc_to_spark_type,
     quote_identifier,
     sanitize_identifier,
@@ -46,12 +45,6 @@ def test_decimal_precision_scale_and_defaults():
 
 def test_unknown_type_degrades_to_string():
     assert jdbc_to_spark_type(99999) == T.StringType()
-
-
-def test_blob_columns_dropped():
-    cols = [ColumnInfo("a", JDBC["INTEGER"]), ColumnInfo("b", JDBC["BLOB"]),
-            ColumnInfo("c", JDBC["VARCHAR"])]
-    assert [c.name for c in filter_lob_columns(cols)] == ["a", "c"]
 
 
 def test_char_time_hints():
