@@ -38,7 +38,6 @@ from __future__ import annotations
 import argparse
 import sys
 from contextlib import contextmanager
-from decimal import Decimal
 
 from flink_job_spark.operators.envelope import DEFAULT_SRC_SYSTEM
 from flink_job_spark.pipeline import ConsistencyError, IngestConfig, ingest_tables
@@ -113,15 +112,8 @@ def _load_jdbc_table(spark, url, table, key_override, args, props):
                or detect_primary_key(spark, url, table, props)
                or infos[0].name)  # explicit → PK → first column (mis:231-242)
         # one MIN, MAX statement freezes the cutoff AND the partition bounds
-        b = read_key_bounds(spark, url, table, key, properties=props)
-        cutoff = None if b is None else b[1]
-        bounds = None
-        # Spark parses lowerBound/upperBound as longs (a DOUBLE key's "1.5"
-        # fails the read), and py4j hands a NUMERIC key's bounds over as
-        # Decimal. The first and last stride partitions are open-ended, so
-        # whole-number bounds lose no row.
-        if b is not None and all(isinstance(x, (int, float, Decimal)) for x in b):
-            bounds = tuple(int(x) for x in b)
+        bounds = read_key_bounds(spark, url, table, key, properties=props)
+        cutoff = None if bounds is None else bounds[1]
         by_name = {c.name: c for c in infos}
         src = JdbcSnapshotSource(
             url, table, [c.name for c in infos], key, cutoff=cutoff,

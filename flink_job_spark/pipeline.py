@@ -37,7 +37,7 @@ from flink_job_spark.operators.audit import AuditReport, run_consistency_check
 from flink_job_spark.operators.envelope import DEFAULT_SRC_SYSTEM, stamp, with_load_month
 from flink_job_spark.operators.snapshot import freeze_cut, resume_predicate, snapshot_scan
 from flink_job_spark.sinks.iceberg import TABLE_PROPERTIES, iceberg_write
-from flink_job_spark.types import ColumnInfo, infos_from_schema, quote_identifier
+from flink_job_spark.types import ColumnInfo, quote_identifier
 
 log = logging.getLogger(__name__)
 
@@ -155,10 +155,8 @@ def snapshot_ingest(
         if cfg.catalog:
             # Iceberg branch: DDL (month hidden partitioning, zstd, 512 MB,
             # v2, retention — mis:886-913) + writeTo append/overwrite
-            derived = {i.name: i for i in infos_from_schema(scan.schema)}
-            cols = [cfg.infos.get(c) or derived[c] for c in scan.columns]
             iceberg_write(spark, hashed, cfg.catalog, cfg.database, table,
-                          cols, cfg.mode)
+                          scan.schema, cfg.mode)
             target = spark.table(
                 f"{quote_identifier(cfg.catalog)}."
                 f"{quote_identifier(cfg.database)}.{quote_identifier(table)}")

@@ -764,9 +764,11 @@ def _bpe_train_merges(spark: SparkSession, sf_dir: str,
     path (q_bpe_encode) reads the trained segmentation for ONE map step
     instead of re-deriving the corpus word set (a distinct shuffle) and
     re-applying all the merges to it (guide §2.4: remove whole passes).
-    Caller-side cache hygiene: the returned frame and its parent stay
-    persisted for the consuming action; the bench/oracle sweep releases
-    them via unpersist_all between keys."""
+    Cache hygiene: only the last materialized round stays persisted; the
+    returned frame is one map-only replace over it, never persisted, so no
+    superseded round is left behind and nothing recomputes the merge chain.
+    The caller releases that one round (the bench/oracle sweep does so via
+    unpersist_all between keys)."""
     d = fan_out(load_table(spark, sf_dir, "documents"))
     v = (
         d.select(F.explode(words("text")).alias("word"))
@@ -775,7 +777,7 @@ def _bpe_train_merges(spark: SparkSession, sf_dir: str,
          .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
          .select("word",
                  F.regexp_replace("word", "(.)", "#$1#").alias("ws"), "freq")
-    ).persist()
+    )
     merges = []
     # ONE action per round: the argmax collect of round k is ALSO what
     # materializes round k's vocabulary cache (it is the first consumer of
@@ -787,6 +789,7 @@ def _bpe_train_merges(spark: SparkSession, sf_dir: str,
     # dominated, see the verify notes).
     prev = None
     for k in range(1, rounds + 1):
+        v = v.persist()
         sdf = (
             v.select(F.expr("split(btrim(ws, '#'), '##')").alias("s"), "freq")
              .filter(F.size("s") >= 2)  # sequence(1, 0) counts DOWN in Spark
@@ -808,24 +811,21 @@ def _bpe_train_merges(spark: SparkSession, sf_dir: str,
         # v is materialized now; the superseded parent cache can go
         if prev is not None:
             prev.unpersist()
-            prev = None
+        prev = v
         if not top:
             break
         lhs, rhs, cnt = top[0]["lhs"], top[0]["rhs"], top[0]["cnt"]
         merges.append((k, lhs, rhs, lhs + rhs, cnt))
-        nxt = v.select(
+        v = v.select(
             "word",
             F.replace(F.col("ws"), F.lit(f"#{lhs}##{rhs}#"),
                       F.lit(f"#{lhs}{rhs}#")).alias("ws"),
             "freq",
-        ).persist()
-        prev = v
-        v = nxt
+        )
     if keep_final_vocab:
         return merges, v
     if prev is not None:
         prev.unpersist()
-    v.unpersist()
     return merges
 
 

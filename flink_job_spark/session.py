@@ -3,8 +3,19 @@
 The engine itself never assumes local mode — all operators are plain
 DataFrame lineage that scales with whatever cluster the session runs on.
 This factory only encodes the local-mode knobs (shuffle partitions ≈ cores,
-AQE on, UTC session timezone for oracle parity), the driver heap size, one
-JIT policy and the Python executable of Spark's own Python processes.
+AQE on, UTC session timezone for oracle parity), the driver heap size, the
+JVM's default time zone, one JIT policy and the Python executable of Spark's
+own Python processes.
+
+Time zone (`SESSION_TIME_ZONE`): Spark reads a JDBC TIMESTAMP in the JVM's
+default zone, not in `spark.sql.session.timeZone`. On a host whose zone is
+Asia/Tokyo, a Derby `TIMESTAMP('2026-01-01 12:00:00')` landed as 03:00 and
+hashed as the token `2026-01-01 03:00:00.0000`, whether it was read as
+`timestamp` or as `timestamp_ntz`. `get_spark` therefore starts the driver
+JVM with `-Duser.timezone` set to the session zone, one constant for both, so
+a JDBC timestamp keeps its wall clock on any host. Like `JIT_POLICY`, it does
+not reach a JVM that is already running (the driver contract's
+`__spark_entry__` session keeps its host's zone).
 
 JIT policy (`JIT_POLICY`): a snapshot job is one-shot, like the reference's
 Flink job, so the driver JVM's warm-up never pays for itself. With HotSpot's
@@ -18,13 +29,13 @@ which the invocation thresholds do not touch. C2 stays on, so a long run still r
 (`-XX:TieredStopAtLevel=1`) roughly halves set-up CPU but makes a steady
 600k-row snapshot more than twice as slow.
 
-The policy travels in `spark.driver.defaultJavaOptions`, which the launcher
-reads before the JVM starts and prepends to `spark.driver.extraJavaOptions`
-(`--driver-java-options`), so the two compose. A `--conf
-spark.driver.defaultJavaOptions=...` from the caller replaces it. It has no
-effect on a JVM that is already running: a session handed in by the driver
-contract (`__spark_entry__`), or `get_spark` when `getOrCreate` returns a
-live session.
+The policy and the time zone travel in `spark.driver.defaultJavaOptions`,
+which the launcher reads before the JVM starts and prepends to
+`spark.driver.extraJavaOptions` (`--driver-java-options`), so the two
+compose. A `--conf spark.driver.defaultJavaOptions=...` from the caller
+replaces both. They have no effect on a JVM that is already running: a
+session handed in by the driver contract (`__spark_entry__`), or `get_spark`
+when `getOrCreate` returns a live session.
 
 Worker Python (`WORKER_PYTHON`): Spark starts Python processes of its own
 for this engine: the `pyspark.daemon` and its task workers, the data-source
@@ -55,6 +66,8 @@ from collections.abc import Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+SESSION_TIME_ZONE = "UTC"
 
 JIT_POLICY = ("-XX:Tier4InvocationThreshold=100000 "
               "-XX:Tier4MinInvocationThreshold=60000 "
@@ -106,13 +119,14 @@ def get_spark(app_name: str = "flink_job_spark", cpus: int | None = None) -> Spa
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.session.timeZone", SESSION_TIME_ZONE)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # local mode runs everything in the driver JVM; 8g showed multi-second
         # GC spikes on random queries at sf0.1 on a 128 GiB host
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
-        .config("spark.driver.defaultJavaOptions", JIT_POLICY)
+        .config("spark.driver.defaultJavaOptions",
+                f"{JIT_POLICY} -Duser.timezone={SESSION_TIME_ZONE}")
         .config("spark.ui.enabled", "false")
         # the driver testdata stores `events.ts` as parquet TIMESTAMP(NANOS)
         # which Spark only reads via this legacy long mapping
@@ -131,7 +145,7 @@ def ensure_session_confs(spark: SparkSession) -> None:
     runtime-settable.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.session.timeZone", SESSION_TIME_ZONE)
     # runtime-settable AQE knobs the skew-sensitive joins rely on
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")

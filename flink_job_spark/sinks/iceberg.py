@@ -16,10 +16,15 @@ The Spark-native equivalents generated here:
 - write → ``df.writeTo(target).append()`` (DataFrameWriterV2)
 
 Deliberate deviations (documented, driven by Spark's SQL surface):
-- TIMESTAMP columns render as TIMESTAMP_NTZ: the reference strips timezones
-  to LocalDateTime (mis:1194-1197), which is exactly Spark's NTZ semantics.
-- TIME columns render as STRING ('HH:mm:ss[.ffff]'): Spark SQL has no TIME
-  type (SURVEY §1.2); the reference maps them to Iceberg TIME (mis:781-783).
+- A source column is declared as the written frame holds it, not re-derived
+  from a JDBC type id: a parquet stand-in's ``array<float>`` column is
+  ``ARRAY<FLOAT>``, where the reference's lattice has no array type.
+- A JDBC TIMESTAMP column is TIMESTAMP_NTZ because the JDBC read already
+  types it so (``types.py``): the reference strips timezones to
+  LocalDateTime (mis:1194-1197), which is exactly Spark's NTZ semantics.
+- TIME columns are STRING ('HH:mm:ss[.ffff]'), again from the read: Spark
+  SQL has no TIME type (SURVEY §1.2); the reference maps them to Iceberg
+  TIME (mis:781-783).
 
 The Iceberg runtime jars are not in this sandbox, so the DDL strings and conf
 dicts are unit-tested for parity; execution is exercised only through the
@@ -30,8 +35,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark.sql import types as T
+
 from flink_job_spark.operators.envelope import TECH_COLUMNS, tech_column_names
-from flink_job_spark.types import ColumnInfo, quote_identifier
+from flink_job_spark.types import quote_identifier
 
 ICEBERG_TARGET_FILE_SIZE_BYTES = 536870912  # 512 MB (mis:86)
 
@@ -95,28 +102,28 @@ def build_database_ddl(catalog: str, database: str) -> str:
             f"{quote_identifier(catalog)}.{quote_identifier(database)}")
 
 
-def column_ddl_type(col: ColumnInfo) -> str:
-    """Spark DDL type for a source column — the lattice of mis:750-799 with
-    the two documented deviations (TIMESTAMP→NTZ, TIME→STRING)."""
-    return col.spark_type.simpleString().upper()
+def column_ddl_type(dtype: T.DataType) -> str:
+    """Spark DDL type of a frame column: the type the frame holds."""
+    return dtype.simpleString().upper()
 
 
 def build_iceberg_ddl(
     catalog: str,
     database: str,
     table: str,
-    columns: list[ColumnInfo],
+    schema: T.StructType,
 ) -> str:
-    """CREATE TABLE DDL with property parity against mis:886-913.
+    """CREATE TABLE DDL with property parity against mis:886-913; ``schema``
+    is the scanned source frame's, each field declared as its own type.
 
     Month partitioning on the (collision-resolved) load_dttm tech column is
     expressed as ``PARTITIONED BY (months(load_dttm))`` — Iceberg's hidden
     partition transform, the Spark spelling of 'partitioning'='month(...)'
     (mis:905)."""
-    src_names = [c.name for c in columns]
-    tech = tech_column_names(src_names)
+    tech = tech_column_names(schema.names)
 
-    parts = [f"{quote_identifier(c.name)} {column_ddl_type(c)}" for c in columns]
+    parts = [f"{quote_identifier(f.name)} {column_ddl_type(f.dataType)}"
+             for f in schema.fields]
     # tech-column types from the envelope (mis:898-900); load_dttm, the
     # partition key, is NOT NULL
     parts += [
@@ -137,7 +144,7 @@ def build_iceberg_ddl(
 
 
 def iceberg_write(spark, df, catalog: str, database: str, table: str,
-                  columns: list[ColumnInfo], mode: str = "append") -> None:
+                  schema: T.StructType, mode: str = "append") -> None:
     """The writer branch: ensure namespace+table exist (DDL above), then
     DataFrameWriterV2 append/overwrite — the Spark equivalent of the
     reference's CREATE TABLE IF NOT EXISTS + INSERT INTO (mis:886-939).
@@ -145,7 +152,7 @@ def iceberg_write(spark, df, catalog: str, database: str, table: str,
     'replace' truncates-by-overwrite like the reference's drop/replace mode
     (mis:261-263). Requires the Iceberg Spark runtime on the classpath."""
     spark.sql(build_database_ddl(catalog, database))
-    spark.sql(build_iceberg_ddl(catalog, database, table, columns))
+    spark.sql(build_iceberg_ddl(catalog, database, table, schema))
     target = (f"{quote_identifier(catalog)}.{quote_identifier(database)}"
               f".{quote_identifier(table)}")
     writer = df.writeTo(target)

@@ -8,6 +8,8 @@ The whole custom source class dissolves into ``spark.read.jdbc`` options:
   `partitionColumn/lowerBound/upperBound/numPartitions` PARALLEL read with a
   floor predicate; strictly more scalable, same observable rows under the
   total order on the key.
+- the reference's JDBC-id type mapping (mis:698-844) → ``customSchema``:
+  each metadata column declared as its lattice type (types.py), once
 
 No database ships in this container, so this module only *builds* reader
 configs (pure, unit-testable); `.load()` happens at the call site.
@@ -21,15 +23,16 @@ from typing import Any
 
 from pyspark.sql import DataFrameReader, SparkSession
 
+from flink_job_spark.types import ColumnInfo, quote_identifier
+
 DEFAULT_FETCH_SIZE = 50_000  # mis:83
 
 
-def quote_source_identifier(name: str, quote: str = '"') -> str:
-    """Source-dialect identifier quoting for the pushed-down subquery — the
-    reference double-quotes Firebird identifiers (escapeFirebirdIdentifier,
-    mis:857-859). ANSI double-quote is the default (Firebird/Derby/Postgres);
-    pass '`' for MySQL-family sources."""
-    return quote + name.replace(quote, quote * 2) + quote
+def quote_source_identifier(name: str) -> str:
+    """Source-dialect identifier quoting for the pushed-down subquery: ANSI
+    double quotes, as the reference quotes Firebird identifiers
+    (escapeFirebirdIdentifier, mis:857-859)."""
+    return '"' + name.replace('"', '""') + '"'
 
 
 def render_sql_literal(value: Any) -> str:
@@ -68,22 +71,20 @@ class JdbcSnapshotSource:
     floor: Any = None
     fetch_size: int = DEFAULT_FETCH_SIZE
     num_partitions: int = 1
-    bounds: tuple[int, int] | None = None  # (lower, upper) for partitionColumn
+    bounds: tuple[Any, Any] | None = None  # key (MIN, MAX) for partitionColumn
     properties: dict[str, str] = field(default_factory=dict)
-    quote: str = '"'  # source dialect identifier quote (mis:857-859)
-    # metadata-scan ColumnInfos: TIME columns must arrive as the engine's
-    # 'HH:mm:ss' STRING stand-in (SURVEY §1.2; types.py lattice). Spark's
-    # JDBC reader maps java.sql.Types.TIME to TimestampType by default,
-    # which would silently bypass the is_time hash-token rule — customSchema
-    # overrides the mapping so the driver's getString() delivers the
-    # stand-in directly (asserted end-to-end in tests/test_jdbc_e2e.py).
-    infos: dict[str, Any] | None = None
+    # metadata-scan ColumnInfos: the reader declares each of these columns as
+    # its lattice type (types.py, SURVEY §1.2) instead of Spark's JDBC
+    # dialect mapping, so the frame holds SMALLINT as smallint, TIMESTAMP as
+    # timestamp_ntz and TIME as the 'HH:mm:ss' string stand-in (the driver's
+    # getString(); asserted end-to-end in tests/test_jdbc_e2e.py)
+    infos: dict[str, ColumnInfo] | None = None
 
     def snapshot_query(self) -> str:
         """The pushed-down subquery (explicit columns, cutoff+floor predicate),
         mirroring the reference's generated source SQL (mis:1076-1088) minus the
         ORDER BY — parallel key-range partitions supersede single-cursor order."""
-        q = lambda n: quote_source_identifier(n, self.quote)  # noqa: E731
+        q = quote_source_identifier
         cols = ", ".join(q(c) for c in self.columns)
         preds = []
         if self.cutoff is None:
@@ -96,15 +97,14 @@ class JdbcSnapshotSource:
         return f"(SELECT {cols} FROM {q(self.table)} WHERE {where}) snap"
 
     def custom_schema(self) -> str | None:
-        """`customSchema` clause for columns whose Spark-JDBC default mapping
-        diverges from the engine's type lattice — today that is exactly the
-        TIME family (stand-in STRING, never TimestampType)."""
+        """`customSchema` clause declaring every metadata column as its
+        ``ColumnInfo.spark_type``: the lattice is the frame's only type
+        mapping. Spark keeps each column's nullability from the source."""
         if not self.infos:
             return None
-        quoted = [f"{quote_source_identifier(c, '`')} STRING"
-                  for c in self.columns
-                  if getattr(self.infos.get(c), "is_time", False)]
-        return ", ".join(quoted) or None
+        return ", ".join(
+            f"{quote_identifier(c)} {self.infos[c].spark_type.simpleString()}"
+            for c in self.columns if c in self.infos) or None
 
     def reader(self, spark: SparkSession) -> DataFrameReader:
         r = (spark.read.format("jdbc")
@@ -116,9 +116,16 @@ class JdbcSnapshotSource:
             r = r.option("customSchema", cs)
         for k, v in self.properties.items():
             r = r.option(k, v)
-        if self.num_partitions > 1 and self.bounds is not None:
+        # Spark parses lowerBound/upperBound as longs (a DOUBLE key's "1.5"
+        # fails the read), and py4j hands a NUMERIC key's bounds over as
+        # Decimal. The first and last stride partitions are open-ended, so
+        # whole-number bounds lose no row. Other bounds (dates, strings)
+        # read in one partition.
+        b = self.bounds
+        if (self.num_partitions > 1 and b is not None
+                and all(isinstance(x, (int, float, Decimal)) for x in b)):
             r = (r.option("partitionColumn", self.order_col)
-                 .option("lowerBound", str(self.bounds[0]))
-                 .option("upperBound", str(self.bounds[1]))
+                 .option("lowerBound", str(int(b[0])))
+                 .option("upperBound", str(int(b[1])))
                  .option("numPartitions", str(self.num_partitions)))
         return r

@@ -124,12 +124,11 @@ def read_watermark_value(
     url: str,
     table: str,
     order_col: str,
-    quote: str = '"',
     properties: dict[str, str] | None = None,
 ) -> Any:
     """Freeze the snapshot cutoff: SELECT MAX(order_col) at job start
     (mis:628-650). Runs as one scalar query on the source."""
-    q = lambda n: quote_source_identifier(n, quote)  # noqa: E731
+    q = quote_source_identifier
     row = _query_row(spark, url, f"SELECT MAX({q(order_col)}) FROM {q(table)}",
                      1, properties)
     return None if row is None else row[0]
@@ -140,13 +139,12 @@ def read_key_bounds(
     url: str,
     table: str,
     order_col: str,
-    quote: str = '"',
     properties: dict[str, str] | None = None,
 ) -> tuple[Any, Any] | None:
     """(MIN, MAX) of the order key — the partition bounds for the parallel
     key-range read (the scalable successor of the reference's single cursor).
     MAX is also the snapshot cutoff, so one statement can freeze both."""
-    q = lambda n: quote_source_identifier(n, quote)  # noqa: E731
+    q = quote_source_identifier
     row = _query_row(spark, url, f"SELECT MIN({q(order_col)}), MAX({q(order_col)}) "
                                  f"FROM {q(table)}", 2, properties)
     if row is None or None in row:

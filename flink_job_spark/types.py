@@ -4,8 +4,12 @@ The reference infers schemas at runtime from JDBC ``DatabaseMetaData.getColumns`
 and derives three parallel type representations from the JDBC type id
 (reference: mis_initial_job/src/main/java/com/rzdmed/flink/FirebirdToIcebergJob.java
 mapToFlinkType 698-745, mapToIcebergSqlType 750-799, mapToFlinkDataType 804-844).
-Here the single source of truth is a Spark ``DataType`` plus per-column metadata
-(char precision, time-ness) that the hash canonicalizer needs.
+Here the mapping runs in one direction, JDBC id → Spark ``DataType``, and is
+applied once: the JDBC reader declares every column as its lattice type
+(``customSchema``, ``sources/jdbc.py``), so the frame holds these types and
+every later consumer (hash tokens, the parquet target, the Iceberg DDL) reads
+them off the frame. ``ColumnInfo`` also carries the per-column hints the hash
+canonicalizer needs (char precision, time-ness).
 
 Notable semantics preserved:
 - unknown types degrade to STRING with a warning (mis:568-579)
@@ -17,7 +21,6 @@ Notable semantics preserved:
 from __future__ import annotations
 
 import logging
-import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import types as T
@@ -92,49 +95,6 @@ def jdbc_to_spark_type(jdbc_type: int, precision: int = 0, scale: int = 0) -> T.
 
 def to_struct_type(cols: list[ColumnInfo]) -> T.StructType:
     return T.StructType([T.StructField(c.name, c.spark_type, c.nullable) for c in cols])
-
-
-def spark_to_jdbc_type(dtype: T.DataType) -> tuple[int, int, int]:
-    """Inverse of the lattice: Spark DataType → (jdbc id, precision, scale).
-    Used when a DataFrame arrives without source metadata (e.g. parquet
-    stand-ins) and a ColumnInfo view is needed for DDL/hash canonicalization."""
-    j = JDBC
-    if isinstance(dtype, T.BooleanType):
-        return j["BOOLEAN"], 0, 0
-    if isinstance(dtype, (T.ByteType, T.ShortType)):
-        return j["SMALLINT"], 0, 0
-    if isinstance(dtype, T.IntegerType):
-        return j["INTEGER"], 0, 0
-    if isinstance(dtype, T.LongType):
-        return j["BIGINT"], 0, 0
-    if isinstance(dtype, T.FloatType):
-        return j["REAL"], 0, 0
-    if isinstance(dtype, T.DoubleType):
-        return j["DOUBLE"], 0, 0
-    if isinstance(dtype, T.DecimalType):
-        return j["DECIMAL"], dtype.precision, dtype.scale
-    if isinstance(dtype, T.DateType):
-        return j["DATE"], 0, 0
-    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-        return j["TIMESTAMP"], 0, 0
-    if isinstance(dtype, T.BinaryType):
-        return j["VARBINARY"], 0, 0
-    return j["VARCHAR"], 0, 0
-
-
-def infos_from_schema(schema: T.StructType) -> list[ColumnInfo]:
-    """ColumnInfo view of a Spark schema (round-trips through the lattice)."""
-    out = []
-    for f in schema.fields:
-        jdbc_type, precision, scale = spark_to_jdbc_type(f.dataType)
-        out.append(ColumnInfo(f.name, jdbc_type, type_name=f.dataType.simpleString(),
-                              precision=precision, scale=scale, nullable=f.nullable))
-    return out
-
-
-def sanitize_identifier(name: str) -> str:
-    """`[^A-Za-z0-9_]` → `_`, as the reference does for uids/names (mis:270, fb:427-429)."""
-    return re.sub(r"[^A-Za-z0-9_]", "_", name)
 
 
 def quote_identifier(name: str) -> str:

@@ -7,6 +7,9 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+from pyspark.sql import types as T
+
 from flink_job_spark.pipeline import IngestConfig, snapshot_ingest
 from flink_job_spark.sinks.iceberg import (
     ICEBERG_TARGET_FILE_SIZE_BYTES,
@@ -17,7 +20,7 @@ from flink_job_spark.sinks.iceberg import (
     column_ddl_type,
 )
 from flink_job_spark.sources.tables import load_table
-from flink_job_spark.types import JDBC, ColumnInfo
+from flink_job_spark.types import JDBC, ColumnInfo, to_struct_type
 
 COLS = [
     ColumnInfo("id", JDBC["INTEGER"], nullable=False),
@@ -35,7 +38,7 @@ COLS = [
 
 def test_table_properties_match_reference():
     """Every property of buildCreateTableSql (mis:903-911) appears verbatim."""
-    ddl = build_iceberg_ddl("iceberg", "db1", "t1", COLS)
+    ddl = build_iceberg_ddl("iceberg", "db1", "t1", to_struct_type(COLS))
     assert "CREATE TABLE IF NOT EXISTS `iceberg`.`db1`.`t1`" in ddl
     assert "USING iceberg" in ddl
     for prop in [
@@ -54,7 +57,7 @@ def test_table_properties_match_reference():
 
 def test_tech_columns_in_ddl():
     """11 tech columns with the types of mis:898-900 (TIMESTAMP→NTZ)."""
-    ddl = build_iceberg_ddl("iceberg", "db1", "t1", COLS)
+    ddl = build_iceberg_ddl("iceberg", "db1", "t1", to_struct_type(COLS))
     assert "`load_dttm` TIMESTAMP_NTZ NOT NULL" in ddl   # mis:898 NOT NULL
     for frag in [
         "`load_dttm_tz` TIMESTAMP_NTZ", "`load_id` BIGINT", "`op` STRING",
@@ -66,7 +69,7 @@ def test_tech_columns_in_ddl():
 
 
 def test_source_column_types():
-    ddl = build_iceberg_ddl("iceberg", "db1", "t1", COLS)
+    ddl = build_iceberg_ddl("iceberg", "db1", "t1", to_struct_type(COLS))
     for frag in [
         "`id` INT", "`amount` DECIMAL(18,2)", "`name` STRING", "`code` STRING",
         "`born` DATE", "`at_time` STRING",  # TIME→STRING documented deviation
@@ -74,14 +77,32 @@ def test_source_column_types():
         "`ratio` DOUBLE",
     ]:
         assert frag in ddl, f"missing {frag}"
-    assert column_ddl_type(ColumnInfo("x", JDBC["SMALLINT"])) == "SMALLINT"
+    assert column_ddl_type(T.ShortType()) == "SMALLINT"
+
+
+TESTDATA_TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
+                   "lineitem", "events", "documents", "embeddings"]
+
+
+@pytest.mark.parametrize("table", TESTDATA_TABLES)
+def test_ddl_declares_each_column_as_the_frame_holds_it(spark, sf_dir, table):
+    """Every source column's declared type parses back to the frame's own
+    type, so the write needs no cast; e.g. `embeddings.embedding` is
+    ARRAY<FLOAT>, which no store assignment casts to STRING."""
+    schema = load_table(spark, sf_dir, table).schema
+    ddl = build_iceberg_ddl("iceberg", "db1", table, schema)
+    lines = dict(line.strip().rstrip(",").split(" ", 1)
+                 for line in ddl.splitlines()[1:len(schema.fields) + 1])
+    for f in schema.fields:
+        declared = lines[f"`{f.name}`"]
+        assert T.DataType.fromDDL(declared) == f.dataType, (f.name, declared)
 
 
 def test_tech_name_collision_prefix():
     """A source column named load_dttm pushes the tech column (and the
     partition transform) to __load_dttm (mis:866-883)."""
     cols = COLS + [ColumnInfo("load_dttm", JDBC["TIMESTAMP"])]
-    ddl = build_iceberg_ddl("iceberg", "db1", "t1", cols)
+    ddl = build_iceberg_ddl("iceberg", "db1", "t1", to_struct_type(cols))
     assert "`__load_dttm` TIMESTAMP_NTZ NOT NULL" in ddl
     assert "PARTITIONED BY (months(`__load_dttm`))" in ddl
 

@@ -2,7 +2,7 @@
 partition bounds from one MIN, MAX statement; it never issues a second
 MAX-only watermark query. A NUMERIC key's cutoff renders as a bare number,
 and NUMERIC and DOUBLE bounds split the read into ``--parallelism``
-partitions."""
+partitions, also when a caller builds the source with such bounds itself."""
 
 from __future__ import annotations
 
@@ -13,7 +13,7 @@ import pytest
 
 from flink_job_spark import cli
 from flink_job_spark.sources import metadata
-from flink_job_spark.sources.jdbc import render_sql_literal
+from flink_job_spark.sources.jdbc import JdbcSnapshotSource, render_sql_literal
 
 
 def _derby_table(spark, url: str, n: int, key_type: str) -> None:
@@ -53,6 +53,18 @@ def test_parallel_jdbc_load_takes_cutoff_from_bounds(spark, tmp_path, monkeypatc
     assert df.count() == n_rows
     # NUMERIC (Decimal) and DOUBLE (float) bounds split the read like BIGINT's
     assert df.rdd.getNumPartitions() == (parallelism if n_rows else 1)
+
+
+def test_direct_source_splits_on_double_bounds(spark):
+    """A caller that builds the source itself passes a DOUBLE key's bounds
+    as read; the reader turns them into the whole numbers Spark parses."""
+    url = "jdbc:derby:memory:fjs_probe_direct_double;create=true"
+    _derby_table(spark, url, 40, "DOUBLE")
+    src = JdbcSnapshotSource(url, "probe_t", ["pk", "v"], "pk", cutoff=40.0,
+                             num_partitions=2, bounds=(1.0, 40.0))
+    df = src.reader(spark).load()
+    assert df.rdd.getNumPartitions() == 2
+    assert df.count() == 40
 
 
 def test_decimal_literal_renders_bare_in_plain_notation():

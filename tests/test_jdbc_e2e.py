@@ -104,7 +104,6 @@ def test_jdbc_empty_cutoff_contradiction(spark, derby_customer):
 
 def test_quote_source_identifier_dialects():
     assert quote_source_identifier('a"b') == '"a""b"'      # ANSI (mis:857-859)
-    assert quote_source_identifier("a`b", "`") == "`a``b`"  # MySQL family
 
 
 # --- live TIME column through the full source -> envelope -> hash path --------
@@ -152,7 +151,7 @@ def test_time_column_reads_as_standin_string(spark, derby_timetab):
     assert infos["t"].is_time and not infos["id"].is_time
     src = JdbcSnapshotSource(TIME_URL, "timetab", ["id", "t"], "id",
                              cutoff=4, infos=infos)
-    assert src.custom_schema() == "`t` STRING"
+    assert "`t` string" in src.custom_schema().split(", ")
     df = src.reader(spark).load()
     assert dict(df.dtypes)["t"] == "string"
     got = {r["id"]: r["t"] for r in df.collect()}
@@ -180,3 +179,49 @@ def test_time_column_end_to_end_row_hash_matches_java_rule(spark, derby_timetab)
         tok_t = (t[:8] + ".0000") if t is not None else "<NULL>"
         want = hashlib.md5(f"{i}|{tok_t}".encode()).hexdigest()
         assert got[i] == want, (i, t, got[i], want)
+
+
+# --- one type lattice: the JDBC frame holds the metadata's types --------------
+
+LATTICE_URL = "jdbc:derby:memory:fjs_lattice_e2e;create=true"
+
+
+@pytest.fixture(scope="module")
+def derby_lattice(spark):
+    """A table of the four types whose Spark-JDBC default mapping differs
+    from, or must be pinned to, the lattice (SURVEY §1.2)."""
+    conn = spark.sparkContext._jvm.java.sql.DriverManager.getConnection(LATTICE_URL)
+    st = conn.createStatement()
+    st.executeUpdate('CREATE TABLE "lat" ("id" BIGINT NOT NULL, "s" SMALLINT, '
+                     '"ts" TIMESTAMP, "t" TIME, "amount" DECIMAL(12,2))')
+    st.executeUpdate('INSERT INTO "lat" VALUES '
+                     "(1, 7, TIMESTAMP('2026-01-01 12:00:00'), TIME('13:45:07'), 1.25), "
+                     "(2, NULL, NULL, NULL, NULL)")
+    st.close()
+    conn.close()
+    yield LATTICE_URL
+
+
+def test_jdbc_frame_holds_the_lattice_types(spark, tmp_path, derby_lattice):
+    """Read with its metadata, the frame has exactly `to_struct_type(infos)`'s
+    types (smallint and timestamp_ntz, not Spark's int and timestamp), and a
+    snapshot of it lands timestamp_ntz."""
+    from flink_job_spark.pipeline import IngestConfig, ingest_tables
+    from flink_job_spark.sources.metadata import read_table_metadata
+    from flink_job_spark.types import to_struct_type
+
+    cols = read_table_metadata(spark, LATTICE_URL, "lat")
+    infos = {c.name: c for c in cols}
+    df = JdbcSnapshotSource(LATTICE_URL, "lat", list(infos), "id", cutoff=2,
+                            infos=infos).reader(spark).load()
+    assert ([(f.name, f.dataType) for f in df.schema.fields]
+            == [(f.name, f.dataType) for f in to_struct_type(cols).fields])
+    assert dict(df.dtypes) == {"id": "bigint", "s": "smallint", "ts": "timestamp_ntz",
+                               "t": "string", "amount": "decimal(12,2)"}
+
+    res = ingest_tables(spark, [(df, "lat", str(tmp_path / "lat"), "id", infos)],
+                        IngestConfig(mode="replace", load_dttm=dt.datetime(2026, 1, 1)))
+    assert res[0].ok, res[0]
+    landed = spark.read.parquet(str(tmp_path / "lat"))
+    assert dict(landed.dtypes)["ts"] == "timestamp_ntz"
+    assert landed.filter("id = 1").first()["ts"] == dt.datetime(2026, 1, 1, 12, 0)

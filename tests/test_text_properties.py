@@ -352,3 +352,18 @@ def test_multiscript_segmentation_rule_pinned(spark):
     got = {r["text"]: r["n"] for r in
            df.select("text", F.size(words("text")).alias("n")).collect()}
     assert got == cases
+
+
+def test_bpe_encode_leaves_one_trainer_frame(spark, sf_dir):
+    """After one collect of q_bpe_encode, the trainer has released every
+    superseded round: one cached vocabulary frame is left, not two."""
+    from flink_job_spark.queries import all_queries
+    from flink_job_spark.session import persistent_rdd_ids, unpersist_rdd_ids
+
+    # an earlier run's cached rounds would serve these plans without new RDDs
+    spark.catalog.clearCache()
+    before = persistent_rdd_ids(spark)
+    all_queries()["q_bpe_encode"].fn(spark, sf_dir).collect()
+    left = persistent_rdd_ids(spark) - before
+    unpersist_rdd_ids(spark, left)
+    assert len(left) == 1, left

@@ -10,7 +10,6 @@ from flink_job_spark.types import (
     ColumnInfo,
     jdbc_to_spark_type,
     quote_identifier,
-    sanitize_identifier,
     to_struct_type,
 )
 
@@ -61,7 +60,6 @@ def test_struct_type_nullability():
 
 
 def test_identifier_helpers():
-    assert sanitize_identifier("a-b.c$d") == "a_b_c_d"
     assert quote_identifier("we`ird") == "`we``ird`"
 
 
