@@ -5,7 +5,7 @@ reference `damir-kalin/flink-job` (a Flink Firebird→Iceberg snapshot job with 
 dual-engine row-hash consistency audit), re-expressed Spark-first:
 
 - dynamic type lattice → ``StructType``            (flink_job_spark.types)
-- canonical MD5 row hashing as Column expressions  (flink_job_spark.functions.hashing)
+- canonical MD5 row hashing, one Spark-SQL builder (flink_job_spark.functions.hashing)
 - frozen-watermark snapshot-cutoff protocol        (flink_job_spark.operators.snapshot)
 - 11-column audit envelope                         (flink_job_spark.operators.envelope)
 - differential consistency audit                   (flink_job_spark.operators.audit)

@@ -6,17 +6,17 @@ write time → ``row_hash_iceberg``) and audits that they agree
 (FirebirdToIcebergJob.java: Java tokens mis:1615-1694, sink-SQL tokens
 mis:1820-1862, Firebird-SQL tokens fb:1612-1633).
 
-Here both Spark hashes come from one engine. :func:`row_hash_column` builds
-the hash as a PySpark Column expression tree and :func:`row_hash_sql_expr` as
-a generated Spark-SQL string. The two builders are coded separately, but
-Catalyst resolves them to one expression (``semanticEquals`` over every token
-rule), so a write computes one MD5 per row and stores it in both envelope
-columns. The audit's compare of that stored pair therefore fails only when a
-caller overrides ``row_hash``; ``tests/test_hashing.py`` is what checks that
-the builders agree. A third generator, :func:`duckdb_row_hash_sql`, emits the
-equivalent DuckDB SQL for the differential oracle harness.
+Here both Spark hashes come from one builder. :func:`row_hash_sql_expr`
+generates the hash as a Spark-SQL string, the analog of the reference's sink
+SQL; :func:`row_hash_column` is the same string as a Column (``F.expr``), and
+each token rule is written once, in :func:`hash_token_sql`. A write therefore
+computes one MD5 per row and stores it in both envelope columns, and the
+audit's compare of that stored pair fails only when a caller overrides
+``row_hash``. The independent check is a second engine: :func:`duckdb_row_hash_sql`
+emits the equivalent DuckDB SQL for the differential oracle harness, and every
+hash test compares the Spark hash against it.
 
-Token rules (all three implementations; citations to mis):
+Token rules (Spark and DuckDB builders; citations to mis):
 - NULL → ``<NULL>`` sentinel, COALESCE outermost          (1616-1618, 1861)
 - FLOAT/DOUBLE/REAL → ROUND(x,6) as DECIMAL(38,6) string  (1622-1631, 1837-1844)
 - DECIMAL → plain string, comma→dot                       (1633-1640)
@@ -26,7 +26,7 @@ Token rules (all three implementations; citations to mis):
 - DATE → ISO string                                       (1661-1666)
 - CHAR(n) → right-pad with spaces to precision n          (1668-1673, 1846-1855)
 - BINARY → lowercase hex                                  (1675-1683)
-  (the Spark builders map ``hex``'s ``A-F`` with ``translate``, not
+  (the Spark builder maps ``hex``'s ``A-F`` with ``translate``, not
   ``lower()``: ``hex`` emits only ``0-9A-F``, so the token is the same,
   and the first ``lower()`` in a JVM pays a one-off ICU table build of
   about 3.4 CPU-s; the DuckDB oracle keeps ``lower(hex(x))``)
@@ -52,7 +52,7 @@ TOKEN_SEP = "|"       # mis:1599-1605
 TS_FORMAT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSS"  # 4 fractional digits, mis:1656
 
 
-def _hints(dtype: T.DataType, info: ColumnInfo | None) -> tuple[bool, int, bool]:
+def _hints(info: ColumnInfo | None) -> tuple[bool, int, bool]:
     is_char = bool(info and info.is_char and info.precision > 0)
     precision = info.precision if info else 0
     is_time = bool(info and info.is_time)
@@ -60,54 +60,15 @@ def _hints(dtype: T.DataType, info: ColumnInfo | None) -> tuple[bool, int, bool]
 
 
 # ---------------------------------------------------------------------------
-# Implementation 1: Column-expression tree (the "source-side" row_hash)
-# ---------------------------------------------------------------------------
-
-def hash_token_column(col: Column, dtype: T.DataType, info: ColumnInfo | None = None) -> Column:
-    """Canonical string token for one column as a Column expression."""
-    is_char, precision, is_time = _hints(dtype, info)
-
-    if isinstance(dtype, (T.FloatType, T.DoubleType)):
-        tok = F.round(col.cast("double"), 6).cast("decimal(38,6)").cast("string")
-    elif isinstance(dtype, T.DecimalType):
-        tok = F.replace(col.cast("string"), F.lit(","), F.lit("."))
-    elif isinstance(dtype, (T.TimestampNTZType, T.TimestampType)):
-        tok = F.date_format(col, TS_FORMAT_SPARK)
-    elif isinstance(dtype, T.DateType):
-        tok = col.cast("string")
-    elif isinstance(dtype, T.BinaryType):
-        tok = F.translate(F.hex(col), "ABCDEF", "abcdef")
-    elif isinstance(dtype, T.StringType) and is_time:
-        # TIME stand-in: truncate to 'HH:mm:ss', then always '.0000' — the
-        # reference's canonicalizers discard any fraction (mis:1646-1651)
-        tok = F.concat(F.substring(col, 1, 8), F.lit(".0000"))
-    elif isinstance(dtype, T.StringType) and is_char:
-        tok = F.rpad(col, precision, " ")
-    else:
-        tok = col.cast("string")
-
-    return F.coalesce(F.substring(tok, 1, TOKEN_MAX_LEN), F.lit(NULL_SENTINEL))
-
-
-def row_hash_column(df: DataFrame, cols: list[str] | None = None,
-                    infos: dict[str, ColumnInfo] | None = None) -> Column:
-    """MD5 row hash over the canonical tokens of ``cols`` (default: all df columns)."""
-    names = cols if cols is not None else df.columns
-    dtypes = {f.name: f.dataType for f in df.schema.fields}
-    tokens = [hash_token_column(F.col(n), dtypes[n], (infos or {}).get(n)) for n in names]
-    return F.md5(F.concat_ws(TOKEN_SEP, *tokens))
-
-
-# ---------------------------------------------------------------------------
-# Implementation 2: generated Spark-SQL string (the "sink-side" row_hash_iceberg)
-# Coded separately on purpose — mirrors the reference's buildHashExpression
-# SQL generator (mis:1802-1862); it analyzes to the same expression as
-# implementation 1. Use with F.expr(...).
+# Spark: one generated Spark-SQL builder, the analog of the reference's
+# buildHashExpression SQL generator (mis:1802-1862). Every name is quoted, so
+# a column named ``x.y`` or ``we`ird`` is one top-level column.
 # ---------------------------------------------------------------------------
 
 def hash_token_sql(name: str, dtype: T.DataType, info: ColumnInfo | None = None) -> str:
+    """Canonical string token for one column, as Spark SQL (use with F.expr)."""
     q = quote_identifier(name)
-    is_char, precision, is_time = _hints(dtype, info)
+    is_char, precision, is_time = _hints(info)
 
     if isinstance(dtype, (T.FloatType, T.DoubleType)):
         tok = f"CAST(CAST(ROUND(CAST({q} AS DOUBLE), 6) AS DECIMAL(38,6)) AS STRING)"
@@ -137,14 +98,20 @@ def row_hash_sql_expr(schema: T.StructType, cols: list[str] | None = None,
     return f"MD5(CONCAT_WS('{TOKEN_SEP}', {', '.join(tokens)}))"
 
 
+def row_hash_column(df: DataFrame, cols: list[str] | None = None,
+                    infos: dict[str, ColumnInfo] | None = None) -> Column:
+    """MD5 row hash over the canonical tokens of ``cols`` (default: all df columns)."""
+    return F.expr(row_hash_sql_expr(df.schema, cols, infos))
+
+
 # ---------------------------------------------------------------------------
-# Implementation 3: DuckDB SQL generator for the differential oracle
-# (the analog of the reference's second engine; SURVEY §5)
+# DuckDB: the SQL twin for the differential oracle (the analog of the
+# reference's second engine; SURVEY §5)
 # ---------------------------------------------------------------------------
 
 def duckdb_hash_token_sql(name: str, dtype: T.DataType, info: ColumnInfo | None = None) -> str:
     q = '"' + name.replace('"', '""') + '"'
-    is_char, precision, is_time = _hints(dtype, info)
+    is_char, precision, is_time = _hints(info)
 
     if isinstance(dtype, (T.FloatType, T.DoubleType)):
         # Round the SHORTEST DECIMAL REPR, not the exact binary value: Spark's

@@ -17,8 +17,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from flink_job_spark.functions.hashing import hash_token_column
-from flink_job_spark.types import ColumnInfo
+from flink_job_spark.functions.hashing import hash_token_sql
+from flink_job_spark.types import ColumnInfo, quote_identifier
 
 
 def hash_mismatch_flag(h1: str = "row_hash", h2: str = "row_hash_iceberg") -> Column:
@@ -80,17 +80,15 @@ def column_token_diff(src: DataFrame, tgt: DataFrame, key_col: str, key_value: A
     compares column-by-column in Java): returns [{column, src_token, tgt_token,
     equal}] for the first offending row.
     """
+    def tokens(df: DataFrame):
+        dtypes = {f.name: f.dataType for f in df.schema.fields}
+        cols = [F.expr(hash_token_sql(c, dtypes[c], (infos or {}).get(c))).alias(c)
+                for c in columns]
+        key = F.col(quote_identifier(key_col)).cast("string").alias("__k")
+        return point_lookup(df.select(*cols, key), "__k", key_value).first()
+
+    src_row, tgt_row = tokens(src), tokens(tgt)
     out: list[dict] = []
-    dtypes_src = {f.name: f.dataType for f in src.schema.fields}
-    dtypes_tgt = {f.name: f.dataType for f in tgt.schema.fields}
-    src_row = point_lookup(
-        src.select(*[hash_token_column(F.col(c), dtypes_src[c], (infos or {}).get(c)).alias(c)
-                     for c in columns], F.col(key_col).cast("string").alias("__k")),
-        "__k", key_value).first()
-    tgt_row = point_lookup(
-        tgt.select(*[hash_token_column(F.col(c), dtypes_tgt[c], (infos or {}).get(c)).alias(c)
-                     for c in columns], F.col(key_col).cast("string").alias("__k")),
-        "__k", key_value).first()
     for c in columns:
         s = src_row[c] if src_row else None
         t = tgt_row[c] if tgt_row else None

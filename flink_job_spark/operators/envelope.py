@@ -14,8 +14,8 @@ import datetime as dt
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from flink_job_spark.functions.hashing import row_hash_column, row_hash_sql_expr
-from flink_job_spark.types import ColumnInfo
+from flink_job_spark.functions.hashing import row_hash_column
+from flink_job_spark.types import ColumnInfo, quote_identifier
 
 OP_INITIAL = "INITIAL"          # mis:1112
 DEFAULT_SRC_SYSTEM = "mis"      # mis:1115
@@ -62,31 +62,25 @@ def with_envelope(
     ``load_dttm`` defaults to now() at plan-build time (the reference stamps
     LocalDateTime.now() per row, mis:1109; a per-plan constant is the
     deterministic equivalent and partition-friendlier). ``row_hash`` defaults
-    to the canonical hash over all source columns.
+    to the canonical hash over all source columns. Every slot without a
+    value (the CDC-reserved ones and ``row_hash_iceberg``, which
+    :func:`stamp` fills) is a NULL of its ``TECH_COLUMNS`` type.
     """
     src_cols = list(df.columns)
     names = tech_column_names(src_cols)
-    load_ts = load_dttm or dt.datetime.now()
     if row_hash is None:
         row_hash = row_hash_column(df, src_cols, infos)
 
     values: dict[str, Column] = {
-        "load_dttm": F.lit(load_ts).cast("timestamp_ntz"),
-        "load_dttm_tz": F.lit(None).cast("timestamp_ntz"),
-        "load_id": F.lit(None).cast("bigint"),
+        "load_dttm": F.lit(load_dttm or dt.datetime.now())
+                      .cast(dict(TECH_COLUMNS)["load_dttm"]),
         "op": F.lit(OP_INITIAL),
-        "ts_ms": F.lit(None).cast("bigint"),
-        "source_ts_ms": F.lit(None).cast("bigint"),
         "src_system_code": F.lit(src_system_code),
-        "extract_dttm": F.lit(None).cast("timestamp_ntz"),
-        "src_chng_dttm": F.lit(None).cast("timestamp_ntz"),
         "row_hash": row_hash,
-        # null at source; filled sink-side by the SQL-string builder during
-        # the write (mis:930-935, 1802-1811)
-        "row_hash_iceberg": F.lit(None).cast("string"),
     }
-    projection = [F.col(c) for c in src_cols]
-    projection += [values[slot].alias(names[slot]) for slot, _ in TECH_COLUMNS]
+    projection = [F.col(quote_identifier(c)) for c in src_cols]
+    projection += [(values[slot] if slot in values else F.lit(None).cast(ddl))
+                   .alias(names[slot]) for slot, ddl in TECH_COLUMNS]
     return df.select(*projection)
 
 
@@ -98,18 +92,16 @@ def stamp(
     row_hash: Column | None = None,
 ) -> tuple[DataFrame, dict[str, str]]:
     """The full stamp every ingest path writes: the envelope with
-    ``row_hash_iceberg`` filled by the SQL-string hash builder during the
-    write (mis:918-939). The two builders are coded separately but Catalyst
-    resolves them to one expression, so both columns hold one MD5 per row
-    and the audit's compare of them fails only when ``row_hash`` is
-    overridden; ``tests/test_hashing.py`` checks the builders agree.
-    Returns the stamped frame and the collision-resolved envelope names the
-    audit must compare."""
-    src_cols = list(df.columns)
-    names = tech_column_names(src_cols)
-    sink_hash = row_hash_sql_expr(df.schema, src_cols, infos)
-    enveloped = with_envelope(df, src_system_code, load_dttm, infos, row_hash)
-    return enveloped.withColumn(names["row_hash_iceberg"], F.expr(sink_hash)), names
+    ``row_hash_iceberg`` filled during the write (mis:918-939). Both hash
+    columns come from the one canonical builder, so they hold one MD5 per
+    row, and the audit's compare of them fails only when ``row_hash`` is
+    overridden. Returns the stamped frame and the collision-resolved
+    envelope names the audit must compare."""
+    names = tech_column_names(df.columns)
+    canonical = row_hash_column(df, infos=infos)
+    enveloped = with_envelope(df, src_system_code, load_dttm, infos,
+                              canonical if row_hash is None else row_hash)
+    return enveloped.withColumn(names["row_hash_iceberg"], canonical), names
 
 
 def with_load_month(df: DataFrame, names: dict[str, str]) -> DataFrame:

@@ -6,14 +6,14 @@ Per table:
    it from ONE aggregate pass (mis:628-643 + mis:1362-1383); a resume from a
    key floor cuts, writes and audits only keys above the floor
 2. snapshot scan: explicit columns, cutoff predicate  (mis:1076-1088)
-3. stamp the 11-tech-column envelope; row_hash via the Column-expression
-   implementation                                     (mis:1107-1119)
+3. stamp the 11-tech-column envelope; row_hash from the canonical
+   row-hash builder                                   (mis:1107-1119)
 4. write parquet partitioned by month(load_dttm) — the local stand-in for
    the Iceberg DDL (month partitioning mis:905, 512 MB target files mis:908),
    with the codec read from the Iceberg table properties (zstd, mis:907);
-   computing row_hash_iceberg DURING the write via the SQL-string builder
-   (mis:918-939), which Catalyst resolves to the same expression as
-   row_hash, so the hash compare fails only on an overridden row_hash
+   computing row_hash_iceberg DURING the write (mis:918-939) from the same
+   builder as row_hash, so the hash compare fails only on an overridden
+   row_hash
 5. re-read the target and run the COUNT+mismatch audit over the range the
    scan wrote (mis:1385-1411)
 
@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import datetime as dt
 import logging
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from flink_job_spark.operators.audit import AuditReport, run_consistency_check
 from flink_job_spark.operators.envelope import DEFAULT_SRC_SYSTEM, stamp, with_load_month
 from flink_job_spark.operators.snapshot import freeze_cut, resume_predicate, snapshot_scan
-from flink_job_spark.sinks.iceberg import TABLE_PROPERTIES, iceberg_write
+from flink_job_spark.sinks.iceberg import TABLE_PROPERTIES, iceberg_write, qualified_name
 from flink_job_spark.types import ColumnInfo, quote_identifier
 
 log = logging.getLogger(__name__)
@@ -100,7 +100,6 @@ class IngestConfig:
     src_system_code: str = DEFAULT_SRC_SYSTEM
     fail_on_consistency_error: bool = False  # mis:119-121
     load_dttm: dt.datetime | None = None  # fixed for deterministic tests
-    infos: dict[str, ColumnInfo] = field(default_factory=dict)
     # Iceberg writer branch (mis:886-939): when catalog is set, the target is
     # <catalog>.<database>.<table> via DDL + writeTo instead of parquet files.
     # Requires the Iceberg Spark runtime on the classpath.
@@ -140,26 +139,27 @@ def snapshot_ingest(
     order_col: str,
     config: IngestConfig | None = None,
     floor: Any = None,
+    infos: dict[str, ColumnInfo] | None = None,
 ) -> IngestResult:
+    """One table's snapshot; ``infos`` carries per-column ``ColumnInfo``
+    metadata (CHAR/TIME hash hints of a live JDBC source)."""
     cfg = config or IngestConfig()
     try:
         # a resume (floor) cuts, writes and audits the same range: (floor, cutoff]
         cut_source = (source if floor is None
-                      else source.filter(F.col(order_col) > F.lit(floor)))
+                      else source.filter(F.col(quote_identifier(order_col)) > F.lit(floor)))
         cutoff, src_count = freeze_cut(cut_source, order_col)
 
         scan = snapshot_scan(source, list(source.columns), order_col, cutoff,
                              floor=floor, ordered=False)
-        hashed, names = stamp(scan, cfg.src_system_code, cfg.load_dttm, cfg.infos)
+        hashed, names = stamp(scan, cfg.src_system_code, cfg.load_dttm, infos)
 
         if cfg.catalog:
             # Iceberg branch: DDL (month hidden partitioning, zstd, 512 MB,
             # v2, retention — mis:886-913) + writeTo append/overwrite
             iceberg_write(spark, hashed, cfg.catalog, cfg.database, table,
                           scan.schema, cfg.mode)
-            target = spark.table(
-                f"{quote_identifier(cfg.catalog)}."
-                f"{quote_identifier(cfg.database)}.{quote_identifier(table)}")
+            target = spark.table(qualified_name(cfg.catalog, cfg.database, table))
         else:
             to_write = with_load_month(hashed, names)
             drift = _detect_schema_drift(spark, target_path, to_write.schema) \
@@ -202,15 +202,9 @@ def ingest_tables(
     """Multi-table loop with per-table failure isolation and running totals
     (the reference's batch loop, mis:189-198, 299-359). A 5th tuple element
     carries per-table ColumnInfo metadata (live JDBC sources)."""
-    import dataclasses
-
-    results = []
-    for item in tables:
-        df, name, path, key = item[:4]
-        infos = item[4] if len(item) > 4 and item[4] else None
-        cfg = (dataclasses.replace(config or IngestConfig(), infos=infos)
-               if infos else config)
-        results.append(snapshot_ingest(spark, df, name, path, key, cfg))
+    results = [snapshot_ingest(spark, df, name, path, key, config,
+                               infos=rest[0] if rest else None)
+               for df, name, path, key, *rest in tables]
     total_read = sum(r.report.source_count for r in results if r.report)
     total_written = sum(r.report.target_count for r in results if r.report)
     log.info("ingest totals: rows_read=%d rows_written=%d delta=%d failures=%d",

@@ -158,7 +158,7 @@ def q_tech_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- 8/9. hash-mismatch audit queries with deterministic injected corruption ---
 
 def _corrupted_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lineitem + row_hash (Column impl) + row_hash_iceberg (independent SQL impl)
+    """lineitem + row_hash over the clean columns + row_hash_iceberg
     computed over a copy whose l_quantity is corrupted for l_orderkey%97==0 —
     a deterministic stand-in for the cross-engine divergence the reference's
     audit exists to catch (mis:1264-1331)."""

@@ -95,15 +95,29 @@ def build_catalog_conf(cfg: IcebergCatalogConfig) -> dict[str, str]:
     return conf
 
 
+def qualified_name(*parts: str) -> str:
+    """Dot-joined name with each part quoted on its own: `` `cat`.`db`.`t` ``."""
+    return ".".join(map(quote_identifier, parts))
+
+
 def build_database_ddl(catalog: str, database: str) -> str:
     """CREATE DATABASE IF NOT EXISTS iceberg.<db> (mis:184) — Spark spells
     catalog-scoped databases as namespaces."""
-    return (f"CREATE NAMESPACE IF NOT EXISTS "
-            f"{quote_identifier(catalog)}.{quote_identifier(database)}")
+    return f"CREATE NAMESPACE IF NOT EXISTS {qualified_name(catalog, database)}"
 
 
 def column_ddl_type(dtype: T.DataType) -> str:
-    """Spark DDL type of a frame column: the type the frame holds."""
+    """Spark DDL type of a frame column: the type the frame holds. Nested
+    types recurse, and a struct field keeps its own name, quoted, and its
+    nullability."""
+    if isinstance(dtype, T.ArrayType):
+        return f"ARRAY<{column_ddl_type(dtype.elementType)}>"
+    if isinstance(dtype, T.MapType):
+        return f"MAP<{column_ddl_type(dtype.keyType)}, {column_ddl_type(dtype.valueType)}>"
+    if isinstance(dtype, T.StructType):
+        return "STRUCT<" + ", ".join(
+            f"{quote_identifier(f.name)}: {column_ddl_type(f.dataType)}"
+            + ("" if f.nullable else " NOT NULL") for f in dtype.fields) + ">"
     return dtype.simpleString().upper()
 
 
@@ -131,11 +145,9 @@ def build_iceberg_ddl(
         + (" NOT NULL" if slot == "load_dttm" else "")
         for slot, ddl in TECH_COLUMNS
     ]
-    target = (f"{quote_identifier(catalog)}.{quote_identifier(database)}"
-              f".{quote_identifier(table)}")
     props = ", ".join(f"'{k}' = '{v}'" for k, v in TABLE_PROPERTIES.items())
     return (
-        f"CREATE TABLE IF NOT EXISTS {target} (\n  "
+        f"CREATE TABLE IF NOT EXISTS {qualified_name(catalog, database, table)} (\n  "
         + ",\n  ".join(parts)
         + f"\n) USING iceberg\n"
         f"PARTITIONED BY (months({quote_identifier(tech['load_dttm'])}))\n"
@@ -153,9 +165,7 @@ def iceberg_write(spark, df, catalog: str, database: str, table: str,
     (mis:261-263). Requires the Iceberg Spark runtime on the classpath."""
     spark.sql(build_database_ddl(catalog, database))
     spark.sql(build_iceberg_ddl(catalog, database, table, schema))
-    target = (f"{quote_identifier(catalog)}.{quote_identifier(database)}"
-              f".{quote_identifier(table)}")
-    writer = df.writeTo(target)
+    writer = df.writeTo(qualified_name(catalog, database, table))
     if mode == "replace":
         # overwrite(True), NOT overwritePartitions(): dynamic overwrite only
         # replaces partitions PRESENT in the new data, so a replace run in a

@@ -51,10 +51,11 @@ class ColumnInfo:
     precision: int = 0
     scale: int = 0
     nullable: bool = True
-    spark_type: T.DataType = field(default_factory=T.StringType)
+    # derived from jdbc_type (and precision/scale) by __post_init__
+    spark_type: T.DataType = field(init=False)
     # hash-canonicalization hints not expressible in the Spark type alone
-    is_char: bool = False       # CHAR/NCHAR → rpad-to-precision token (mis:1668-1673)
-    is_time: bool = False       # TIME stand-in string → '.0000' suffix token (mis:1642-1651)
+    is_char: bool = field(init=False)  # CHAR/NCHAR → rpad-to-precision token (mis:1668-1673)
+    is_time: bool = field(init=False)  # TIME stand-in string → '.0000' suffix (mis:1642-1651)
 
     def __post_init__(self) -> None:
         self.spark_type = jdbc_to_spark_type(self.jdbc_type, self.precision, self.scale)

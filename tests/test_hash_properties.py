@@ -1,7 +1,7 @@
-"""Property-based cross-engine hash fuzz: for ANY typed row, the three
-independent canonicalizers (Column tree, generated Spark-SQL, DuckDB SQL)
-must produce the identical MD5 — the reference's dual-implementation
-correctness idea, fuzzed instead of fixtured.
+"""Property-based cross-engine hash fuzz: for ANY typed row, the Spark
+builder (generated Spark SQL, reached as a Column or through ``F.expr``) and
+the independently coded DuckDB SQL twin must produce the identical MD5 — the
+reference's dual-implementation correctness idea, fuzzed instead of fixtured.
 
 NaN/±inf are excluded: the reference's source types (Firebird via JDBC) can't
 produce them, and DECIMAL casts of non-finite values differ per engine.
@@ -84,17 +84,16 @@ def test_three_hash_impls_agree(spark, tmp_path_factory, rows):
 
 
 def test_large_magnitude_production_pair_agrees(spark):
-    """The PRODUCTION pair (Column tree vs generated Spark SQL — the two that
-    run in the real audit) must agree on fuzz-found adversarial magnitudes:
-    576460752305.0 (2^53/1e6 edge) and a repr-tie at the 7th decimal."""
-    from pyspark.sql import functions as F
+    """The production Spark hash gives the expected MD5 on fuzz-found
+    adversarial magnitudes: 576460752305.0 (2^53/1e6 edge), a repr-tie at the
+    7th decimal (rounded half-up) and a value past 2^53."""
+    import hashlib
 
-    df = spark.createDataFrame(
-        [(None, 576460752305.0, None, None, None),
-         (None, 536870912.4978625, None, None, None),
-         (None, -9.9e15, None, None, None)], SCHEMA)
-    rows = df.select(
-        row_hash_column(df).alias("h_col"),
-        F.expr(row_hash_sql_expr(SCHEMA)).alias("h_sql"),
-    ).collect()
-    assert all(r["h_col"] == r["h_sql"] for r in rows), rows
+    doubles = {576460752305.0: "576460752305.000000",
+               536870912.4978625: "536870912.497863",
+               -9.9e15: "-9900000000000000.000000"}
+    df = spark.createDataFrame([(None, f, None, None, None) for f in doubles], SCHEMA)
+    got = {r["f"]: r["h"] for r in df.select("f", row_hash_column(df).alias("h")).collect()}
+    for f, token in doubles.items():
+        want = hashlib.md5(f"<NULL>|{token}|<NULL>|<NULL>|<NULL>".encode()).hexdigest()
+        assert got[f] == want, (f, token)

@@ -1,7 +1,8 @@
 """Hash canonicalization unit tests — FIXTURES.md F2: one column per branch of
-the token rules, NULLs everywhere, the documented edge values. The three
-implementations (Column exprs, generated Spark SQL, DuckDB SQL) must agree
-byte-for-byte — that agreement IS the reference's correctness mechanism."""
+the token rules, NULLs everywhere, the documented edge values. The Spark
+builder (generated Spark SQL, also reached as a Column through
+``row_hash_column``) and the DuckDB twin must agree byte-for-byte — that
+cross-engine agreement IS the reference's correctness mechanism."""
 
 from __future__ import annotations
 
@@ -15,7 +16,6 @@ from pyspark.sql import types as T
 
 from flink_job_spark.functions.hashing import (
     duckdb_row_hash_sql,
-    hash_token_column,
     hash_token_sql,
     row_hash_column,
     row_hash_sql_expr,
@@ -137,12 +137,9 @@ def test_token_edge_semantics(spark, fixture_df):
 
 
 def test_binary_token_is_lowercase_hex_of_every_byte(spark):
-    """Both Spark builders lowercase ``hex``'s A-F with ``translate``, not
+    """The Spark builder lowercases ``hex``'s A-F with ``translate``, not
     ``lower()``: every byte value must still give Python's lowercase hex."""
     data = bytes(range(256))
     df = spark.createDataFrame([(data,)], "b BINARY")
-    row = df.select(
-        hash_token_column(F.col("b"), T.BinaryType()).alias("col"),
-        F.expr(hash_token_sql("b", T.BinaryType())).alias("sql"),
-    ).first()
-    assert row["col"] == row["sql"] == data.hex()
+    row = df.select(F.expr(hash_token_sql("b", T.BinaryType())).alias("sql")).first()
+    assert row["sql"] == data.hex()

@@ -83,13 +83,24 @@ def test_source_column_types():
 TESTDATA_TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
                    "lineitem", "events", "documents", "embeddings"]
 
+_FIELDS = T.StructType([T.StructField("a", T.IntegerType()),
+                        T.StructField("x y", T.StringType(), False),
+                        T.StructField("MixedCase", T.DecimalType(10, 2))])
+NESTED = {
+    "struct": T.StructType([T.StructField("s", _FIELDS)]),
+    "array_of_struct": T.StructType([T.StructField("arr", T.ArrayType(_FIELDS))]),
+    "map": T.StructType([T.StructField("m", T.MapType(
+        T.StringType(), T.ArrayType(T.StructType([T.StructField("Ts", T.TimestampNTZType())]))))]),
+}
 
-@pytest.mark.parametrize("table", TESTDATA_TABLES)
+
+@pytest.mark.parametrize("table", TESTDATA_TABLES + list(NESTED))
 def test_ddl_declares_each_column_as_the_frame_holds_it(spark, sf_dir, table):
     """Every source column's declared type parses back to the frame's own
     type, so the write needs no cast; e.g. `embeddings.embedding` is
-    ARRAY<FLOAT>, which no store assignment casts to STRING."""
-    schema = load_table(spark, sf_dir, table).schema
+    ARRAY<FLOAT>, which no store assignment casts to STRING. Struct fields
+    keep their names' case, quoting and nullability."""
+    schema = NESTED.get(table) or load_table(spark, sf_dir, table).schema
     ddl = build_iceberg_ddl("iceberg", "db1", table, schema)
     lines = dict(line.strip().rstrip(",").split(" ", 1)
                  for line in ddl.splitlines()[1:len(schema.fields) + 1])

@@ -6,6 +6,7 @@ import datetime as dt
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from flink_job_spark.operators.snapshot import cutoff_predicate
 from flink_job_spark.pipeline import (
@@ -254,3 +255,30 @@ def test_spark_entry_stamps_and_audits_lineitem(spark):
     assert len(rows) == 1
     assert rows[0]["target_count"] == spark.read.parquet(*files).count() > 0
     assert rows[0]["hash_mismatches"] == 0
+
+
+def test_dotted_and_backticked_names_ingest(spark, tmp_path):
+    """A column whose name holds ``.`` or a backtick is one top-level column,
+    the order key included: one audited ingest lands every row, and the
+    stored row_hash equals the DuckDB twin's hash of the same rows."""
+    import duckdb
+
+    from flink_job_spark.functions.hashing import duckdb_row_hash_sql
+
+    schema = T.StructType([T.StructField("k.id", T.LongType()),
+                           T.StructField("x.y", T.DoubleType()),
+                           T.StructField("we`ird", T.StringType())])
+    rows = [(i, i / 3, f"v{i}" if i % 4 else None) for i in range(1, 41)]
+    src_path, tgt = str(tmp_path / "src"), str(tmp_path / "tgt")
+    spark.createDataFrame(rows, schema).write.parquet(src_path)
+    [res] = ingest_tables(
+        spark, [(spark.read.parquet(src_path), "dotted", tgt, "k.id")],
+        IngestConfig(mode="replace", load_dttm=dt.datetime(2026, 1, 1)))
+    assert res.ok, res.error or res.report
+    assert res.report.target_count == len(rows)
+
+    landed = spark.read.parquet(tgt).select(F.col("`k.id`"), "row_hash").collect()
+    duck = duckdb.connect().execute(
+        f"SELECT \"k.id\", {duckdb_row_hash_sql(schema)} "
+        f"FROM read_parquet('{src_path}/*.parquet')").fetchall()
+    assert dict(map(tuple, landed)) == dict(duck)

@@ -74,21 +74,16 @@ def test_stream_audited_ingest_catches_corruption(spark, sf_dir, tmp_path):
     import pytest
     from pyspark.sql.streaming import StreamingQueryException
 
-    from flink_job_spark.functions.hashing import TOKEN_SEP, hash_token_column
+    from flink_job_spark.functions.hashing import row_hash_sql_expr
 
     src = str(tmp_path / "src")
     nat = load_table(spark, sf_dir, "nation")
     nat.write.mode("overwrite").parquet(src)
 
-    # source-side hash whose n_name token reads a corrupted value for every
-    # 5th key — the dual-hash divergence the audit exists to catch
-    corrupted = F.when(F.col("n_nationkey") % 5 == 0,
-                       F.concat(F.col("n_name"), F.lit("_X"))
-                       ).otherwise(F.col("n_name"))
-    dtypes = {f.name: f.dataType for f in nat.schema.fields}
-    tokens = [hash_token_column(corrupted if n == "n_name" else F.col(n), dtypes[n])
-              for n in nat.columns]
-    bad_hash = F.md5(F.concat_ws(TOKEN_SEP, *tokens))
+    # source-side hash that is wrong for every 5th key — the dual-hash
+    # divergence the audit exists to catch
+    bad_hash = F.when(F.col("n_nationkey") % 5 == 0, F.md5(F.lit("corrupt"))
+                      ).otherwise(F.expr(row_hash_sql_expr(nat.schema)))
 
     with pytest.raises(StreamingQueryException, match="(?i)consistency"):
         stream_ingest(
@@ -641,19 +636,14 @@ def test_stream_audited_ingest_retry_does_not_duplicate(spark, sf_dir, tmp_path)
     import pytest
     from pyspark.sql.streaming import StreamingQueryException
 
-    from flink_job_spark.functions.hashing import TOKEN_SEP, hash_token_column
+    from flink_job_spark.functions.hashing import row_hash_sql_expr
 
     src, tgt, ckpt = (str(tmp_path / p) for p in ("src", "tgt", "ckpt"))
     nat = load_table(spark, sf_dir, "nation")
     nat.write.mode("overwrite").parquet(src)
 
-    corrupted = F.when(F.col("n_nationkey") % 5 == 0,
-                       F.concat(F.col("n_name"), F.lit("_X"))
-                       ).otherwise(F.col("n_name"))
-    dtypes = {f.name: f.dataType for f in nat.schema.fields}
-    tokens = [hash_token_column(corrupted if n == "n_name" else F.col(n), dtypes[n])
-              for n in nat.columns]
-    bad_hash = F.md5(F.concat_ws(TOKEN_SEP, *tokens))
+    bad_hash = F.when(F.col("n_nationkey") % 5 == 0, F.md5(F.lit("corrupt"))
+                      ).otherwise(F.expr(row_hash_sql_expr(nat.schema)))
 
     import datetime as dtmod
     for _ in range(3):   # fail, retry, retry — same checkpoint, same target
@@ -872,19 +862,15 @@ def test_stream_paged_audited_corruption_blocks_then_recovers(spark, tmp_path):
     from pyspark.sql import types as T
     from pyspark.sql.streaming import StreamingQueryException
 
-    from flink_job_spark.functions.hashing import TOKEN_SEP, hash_token_column
+    from flink_job_spark.functions.hashing import row_hash_sql_expr
     from flink_job_spark.streaming.ingest import stream_paged_ingest_audited
 
     tgt, ckpt = str(tmp_path / "tgt"), str(tmp_path / "ckpt")
-    corrupted = F.when(F.col("id") % 7 == 0,
-                       F.concat(F.col("payload"), F.lit("_X"))
-                       ).otherwise(F.col("payload"))
-    dtypes = {"id": T.LongType(), "payload": T.StringType(),
-              "bucket": T.IntegerType()}
-    tokens = [hash_token_column(corrupted if n == "payload" else F.col(n),
-                                dtypes[n])
-              for n in ("id", "payload", "bucket")]
-    bad_hash = F.md5(F.concat_ws(TOKEN_SEP, *tokens))
+    schema = T.StructType([T.StructField("id", T.LongType()),
+                           T.StructField("payload", T.StringType()),
+                           T.StructField("bucket", T.IntegerType())])
+    bad_hash = F.when(F.col("id") % 7 == 0, F.md5(F.lit("corrupt"))
+                      ).otherwise(F.expr(row_hash_sql_expr(schema)))
 
     with pytest.raises(StreamingQueryException, match="(?i)consistency"):
         stream_paged_ingest_audited(

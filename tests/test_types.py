@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -50,6 +51,15 @@ def test_char_time_hints():
     assert ColumnInfo("x", JDBC["CHAR"], precision=5).is_char
     assert not ColumnInfo("x", JDBC["VARCHAR"]).is_char
     assert ColumnInfo("t", JDBC["TIME"]).is_time
+
+
+@pytest.mark.parametrize("derived", [{"spark_type": T.LongType()}, {"is_char": True},
+                                     {"is_time": True}], ids=lambda d: next(iter(d)))
+def test_derived_fields_are_not_constructor_arguments(derived):
+    """spark_type, is_char and is_time always come from the JDBC type id, so
+    passing one is an error, not a value silently overwritten."""
+    with pytest.raises(TypeError):
+        ColumnInfo("x", JDBC["INTEGER"], **derived)
 
 
 def test_struct_type_nullability():
