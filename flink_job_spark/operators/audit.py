@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from flink_job_spark.functions.hashing import hash_token_sql
-from flink_job_spark.types import ColumnInfo, quote_identifier
+from flink_job_spark.types import ColumnInfo, source_col
 
 
 def hash_mismatch_flag(h1: str = "row_hash", h2: str = "row_hash_iceberg") -> Column:
@@ -84,7 +84,7 @@ def column_token_diff(src: DataFrame, tgt: DataFrame, key_col: str, key_value: A
         dtypes = {f.name: f.dataType for f in df.schema.fields}
         cols = [F.expr(hash_token_sql(c, dtypes[c], (infos or {}).get(c))).alias(c)
                 for c in columns]
-        key = F.col(quote_identifier(key_col)).cast("string").alias("__k")
+        key = source_col(key_col).cast("string").alias("__k")
         return point_lookup(df.select(*cols, key), "__k", key_value).first()
 
     src_row, tgt_row = tokens(src), tokens(tgt)

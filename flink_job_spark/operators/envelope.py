@@ -15,7 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from flink_job_spark.functions.hashing import row_hash_column
-from flink_job_spark.types import ColumnInfo, quote_identifier
+from flink_job_spark.types import ColumnInfo, source_col
 
 OP_INITIAL = "INITIAL"          # mis:1112
 DEFAULT_SRC_SYSTEM = "mis"      # mis:1115
@@ -78,7 +78,7 @@ def with_envelope(
         "src_system_code": F.lit(src_system_code),
         "row_hash": row_hash,
     }
-    projection = [F.col(quote_identifier(c)) for c in src_cols]
+    projection = [source_col(c) for c in src_cols]
     projection += [(values[slot] if slot in values else F.lit(None).cast(ddl))
                    .alias(names[slot]) for slot, ddl in TECH_COLUMNS]
     return df.select(*projection)

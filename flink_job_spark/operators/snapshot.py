@@ -20,12 +20,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from flink_job_spark.types import quote_identifier
-
-
-def _col(name: str) -> Column:
-    """A source column by its exact name: ``x.y`` is one column, not a field."""
-    return F.col(quote_identifier(name))
+from flink_job_spark.types import source_col
 
 
 def freeze_cutoff(df: DataFrame, order_col: str) -> Any:
@@ -34,7 +29,7 @@ def freeze_cutoff(df: DataFrame, order_col: str) -> Any:
     A driver-side scalar read by design: the whole protocol is 'capture one
     value at t0, embed it as a literal'. Returns None on an empty table.
     """
-    return df.agg(F.max(_col(order_col)).alias("w")).first()["w"]
+    return df.agg(F.max(source_col(order_col)).alias("w")).first()["w"]
 
 
 def freeze_cut(df: DataFrame, order_col: str) -> tuple[Any, int]:
@@ -47,7 +42,7 @@ def freeze_cut(df: DataFrame, order_col: str) -> tuple[Any, int]:
     row), and a NULL key fails ``k <= cutoff`` just as COUNT(k) skips it.
     An empty or all-NULL key column yields ``(None, 0)``.
     """
-    key = _col(order_col)
+    key = source_col(order_col)
     row = df.agg(F.max(key).alias("w"), F.count(key).alias("n")).first()
     return row["w"], row["n"]
 
@@ -56,7 +51,7 @@ def cutoff_predicate(order_col: str, cutoff: Any) -> Column:
     """``order_col <= cutoff``; empty table → contradiction (mis:645-657)."""
     if cutoff is None:
         return F.lit(False)  # the reference's '1 = 0'
-    return _col(order_col) <= F.lit(cutoff)
+    return source_col(order_col) <= F.lit(cutoff)
 
 
 def resume_predicate(order_col: str, cutoff: Any, floor: Any = None) -> Column:
@@ -64,7 +59,7 @@ def resume_predicate(order_col: str, cutoff: Any, floor: Any = None) -> Column:
     mis:1073-1080; equivalence via the total order of mis:1087)."""
     pred = cutoff_predicate(order_col, cutoff)
     if floor is not None:
-        pred = pred & (_col(order_col) > F.lit(floor))
+        pred = pred & (source_col(order_col) > F.lit(floor))
     return pred
 
 
@@ -76,6 +71,6 @@ def snapshot_scan(df: DataFrame, columns: list[str], order_col: str,
     At scale the ORDER BY is only needed when a deterministic emission order
     matters (resume bookkeeping); pass ordered=False to skip the global sort.
     """
-    out = df.select(*map(_col, columns)).filter(resume_predicate(order_col, cutoff, floor))
-    return out.orderBy(_col(order_col)) if ordered else out
+    out = df.select(*map(source_col, columns)).filter(resume_predicate(order_col, cutoff, floor))
+    return out.orderBy(source_col(order_col)) if ordered else out
 

@@ -37,7 +37,7 @@ from flink_job_spark.operators.audit import AuditReport, run_consistency_check
 from flink_job_spark.operators.envelope import DEFAULT_SRC_SYSTEM, stamp, with_load_month
 from flink_job_spark.operators.snapshot import freeze_cut, resume_predicate, snapshot_scan
 from flink_job_spark.sinks.iceberg import TABLE_PROPERTIES, iceberg_write, qualified_name
-from flink_job_spark.types import ColumnInfo, quote_identifier
+from flink_job_spark.types import ColumnInfo, source_col
 
 log = logging.getLogger(__name__)
 
@@ -147,7 +147,7 @@ def snapshot_ingest(
     try:
         # a resume (floor) cuts, writes and audits the same range: (floor, cutoff]
         cut_source = (source if floor is None
-                      else source.filter(F.col(quote_identifier(order_col)) > F.lit(floor)))
+                      else source.filter(source_col(order_col) > F.lit(floor)))
         cutoff, src_count = freeze_cut(cut_source, order_col)
 
         scan = snapshot_scan(source, list(source.columns), order_col, cutoff,

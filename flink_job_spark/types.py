@@ -23,6 +23,8 @@ from __future__ import annotations
 import logging
 from dataclasses import dataclass, field
 
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 log = logging.getLogger(__name__)
@@ -101,3 +103,8 @@ def to_struct_type(cols: list[ColumnInfo]) -> T.StructType:
 def quote_identifier(name: str) -> str:
     """Backtick-quote for Spark SQL (the reference backticks Flink SQL ids, mis:853-855)."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def source_col(name: str) -> Column:
+    """A source column by its exact name: ``x.y`` is one column, not a field."""
+    return F.col(quote_identifier(name))
